@@ -516,9 +516,13 @@ def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     # even the multiset matches). Order groups are ≤7 rows in TPC-H
     # shape, so the map-side fan is k² of a small constant — linear in
     # input, while the old self-join scanned and shuffled lineitem
-    # twice with no runtime ReusedExchange.
-    per_order = li.groupBy("l_orderkey").agg(
-        F.collect_list(F.struct("l_linenumber", "l_partkey")).alias("rows")
+    # twice with no runtime ReusedExchange. NULL order keys are dropped
+    # first: the self-join never pairs them, while groupBy would gather
+    # them into one group and link their rows.
+    per_order = (
+        li.where(F.col("l_orderkey").isNotNull())
+        .groupBy("l_orderkey")
+        .agg(F.collect_list(F.struct("l_linenumber", "l_partkey")).alias("rows"))
     )
     directed = (
         per_order.select(F.explode("rows").alias("a"), "rows")

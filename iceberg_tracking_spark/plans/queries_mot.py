@@ -150,7 +150,7 @@ def q_iou_argmax(spark, sf_dir):
 # ~50 px boxes → pairwise IoU ≥ 0.6). On such input the order-sensitive
 # greedy algorithms have a provable closed form — greedy NMS keeps
 # exactly the (conf desc, id asc) argmax per cluster; greedy 1:1 keeps
-# each gt's best det — so the REAL applyInPandas operators run
+# each gt's best det — so the REAL grouped Python operators run
 # end-to-end and their full output hash-checks against ANSI SQL.
 # General-case behavior stays covered by the operator/property tests.
 _DUCK_CLUSTER_DET = """
@@ -197,7 +197,7 @@ def _cluster_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_nms(spark, sf_dir):
-    """W3: exact greedy NMS per frame via applyInPandas (reference
+    """W3: exact greedy NMS per frame, batched mapInPandas (reference
     detection.py:1223-1261). Oracle contract: on clustered input
     (within-cluster IoU ≥ 0.6 > 0.45 threshold, cross-cluster IoU = 0)
     greedy suppression provably keeps exactly the per-cluster
@@ -260,7 +260,7 @@ def q_nms(spark, sf_dir):
     """,
 )
 def q_greedy_match(spark, sf_dir):
-    """W7: global greedy 1:1 assignment per frame via applyInPandas
+    """W7: global greedy 1:1 assignment per frame, batched mapInPandas
     (reference tracking.py:1037-1133). Oracle contract: the candidate
     graph is a disjoint union of stars (each det overlaps exactly one
     gt — cross-cluster IoU = 0 < the 0.1 floor), so greedy assignment
@@ -625,8 +625,8 @@ def q_grid_join_2d(spark, sf_dir):
     """,
 )
 def q_remove_nested(spark, sf_dir):
-    """W4 exact: nested-box removal with confidence classes via
-    applyInPandas per frame (reference detection.py:1120-1198) — a
+    """W4 exact: nested-box removal with confidence classes, batched
+    mapInPandas per frame (reference detection.py:1120-1198) — a
     high-confidence box always beats a low-confidence one; among
     same-class boxes the higher score survives. Oracle contract: on the
     clustered input every within-cluster pair's intersection/smaller

@@ -10,9 +10,9 @@ The streaming form (transformWithStateInPandas) lives in
 streaming/tracker.py and shares this per-frame step.
 
 Determinism: frames processed in sorted order; candidate pairs scored
-and greedily matched in (score desc, track_id asc, det_id asc) order —
-a pinned total order replacing the reference's stable-sort ties
-(SURVEY §7.4 note 1).
+and greedily matched in (score desc, track_id asc, det_id asc,
+detection index asc) order — a pinned total order replacing the
+reference's stable-sort ties (SURVEY §7.4 note 1).
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .kalman import F_MAT, H_MAT, KalmanBoxTracker
+from .kalman import F_MAT, H_MAT, Q_MAT, R_MAT, KalmanBoxTracker
 
 # Transposes used by the stacked (per-frame batched) Kalman math in
 # `SequenceTracker.step`. Stacked `X @ F_MAT.T` / `np.matmul(F_MAT, P)`
@@ -97,16 +97,13 @@ class SequenceTracker:
         """
         cfg = self.cfg
         n_t, n_d = len(self.tracks), len(dets)
-        # 1. predict all tracks — stacked F@x / F@P@F'+Q. Q is a
-        #    per-filter attribute but every filter this tracker ever
-        #    holds is constructed with default noise (this class and
-        #    streaming._tracker_from_state), so the first track's Q
-        #    stands for all.
+        # 1. predict all tracks — stacked F@x / F@P@F'+Q (Q, R: the
+        #    module constants every filter uses)
         if n_t:
             X = np.stack([tr.kf.x for tr in self.tracks])
             P = np.stack([tr.kf.P for tr in self.tracks])
             X = X @ _F_T
-            P = np.matmul(np.matmul(F_MAT, P), _F_T) + self.tracks[0].kf.Q
+            P = np.matmul(np.matmul(F_MAT, P), _F_T) + Q_MAT
         # 2. candidate pairs: dense tracks×dets score matrix + the
         #    radius/size/score gates (same gate expressions, same
         #    IEEE evaluation order per element as the scalar loop)
@@ -137,10 +134,13 @@ class SequenceTracker:
             )
             ti, dj = np.nonzero(ok)
             pairs = list(zip(score[ti, dj].tolist(), ti.tolist(), dj.tolist()))
-        # 3. greedy 1:1 assignment, pinned total order (the key is a
-        #    total order — track_id unique per i, det_id unique per j —
-        #    so the pre-sort pair order is immaterial)
-        pairs.sort(key=lambda p: (-p[0], self.tracks[p[1]].track_id, det_ids[p[2]]))
+        # 3. greedy 1:1 assignment, pinned total order: score desc,
+        #    track_id, det_id, then the detection index — det_ids are
+        #    obj_id values and may repeat within a frame, so the index
+        #    breaks exact ties and the pre-sort pair order is immaterial
+        pairs.sort(
+            key=lambda p: (-p[0], self.tracks[p[1]].track_id, det_ids[p[2]], p[2])
+        )
         used_t: set[int] = set()
         used_d: set[int] = set()
         matches: list[tuple[int, int]] = []
@@ -165,7 +165,7 @@ class SequenceTracker:
             )
             Xm, Pm = X[mi], P[mi]
             Y = Z - Xm @ _H_T
-            S = np.matmul(np.matmul(H_MAT, Pm), _H_T) + self.tracks[0].kf.R
+            S = np.matmul(np.matmul(H_MAT, Pm), _H_T) + R_MAT
             K = np.matmul(np.matmul(Pm, _H_T), np.linalg.inv(S))
             X[mi] = Xm + np.matmul(K, Y[..., None])[..., 0]
             P[mi] = np.matmul(np.eye(6) - np.matmul(K, H_MAT), Pm)

@@ -28,36 +28,31 @@ H_MAT[1, 1] = 1.0
 H_MAT[2, 4] = 1.0
 H_MAT[3, 5] = 1.0
 
+# Noise shared by every filter: process Q, measurement R, and the initial
+# covariance P0 (unit position/size variance, velocity variance 10).
+Q_MAT = np.eye(STATE_DIM)
+R_MAT = np.eye(MEAS_DIM)
+P0_MAT = np.eye(STATE_DIM)
+P0_MAT[2, 2] = 10.0
+P0_MAT[3, 3] = 10.0
+
 
 class KalmanBoxTracker:
     """Per-object constant-velocity filter (reference tracking.py:234-369)."""
 
-    def __init__(
-        self,
-        cx: float,
-        cy: float,
-        w: float,
-        h: float,
-        process_noise: float = 1.0,
-        measurement_noise: float = 1.0,
-        initial_velocity_uncertainty: float = 10.0,
-    ) -> None:
+    def __init__(self, cx: float, cy: float, w: float, h: float) -> None:
         self.x = np.array([cx, cy, 0.0, 0.0, w, h], dtype=np.float64)
-        self.P = np.eye(STATE_DIM, dtype=np.float64)
-        self.P[2, 2] = initial_velocity_uncertainty
-        self.P[3, 3] = initial_velocity_uncertainty
-        self.Q = np.eye(STATE_DIM, dtype=np.float64) * process_noise
-        self.R = np.eye(MEAS_DIM, dtype=np.float64) * measurement_noise
+        self.P = P0_MAT.copy()
 
     def predict(self) -> np.ndarray:
         self.x = F_MAT @ self.x
-        self.P = F_MAT @ self.P @ F_MAT.T + self.Q
+        self.P = F_MAT @ self.P @ F_MAT.T + Q_MAT
         return self.x.copy()
 
     def update(self, cx: float, cy: float, w: float, h: float) -> None:
         z = np.array([cx, cy, w, h], dtype=np.float64)
         y = z - H_MAT @ self.x
-        S = H_MAT @ self.P @ H_MAT.T + self.R
+        S = H_MAT @ self.P @ H_MAT.T + R_MAT
         K = self.P @ H_MAT.T @ np.linalg.inv(S)
         self.x = self.x + K @ y
         self.P = (np.eye(STATE_DIM) - K @ H_MAT) @ self.P

@@ -8,13 +8,23 @@ centrality is bounded by the simple-graph degree limit.
 
 from __future__ import annotations
 
+import os
+
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from iceberg_tracking_spark.plans import QUERIES
 from iceberg_tracking_spark.plans.queries_graph import (
+    _BFS_SRC,
     _supplier_edges,
     q_degree_centrality,
     q_pagerank,
+    q_shortest_path,
 )
+
+from .oracle_harness import compare
 
 
 def test_pagerank_mass_conserved(spark, sf_dir):
@@ -144,3 +154,29 @@ def test_label_propagation_two_cliques_one_bridge(spark):
     assert {out[n] for n in (11, 12, 13)} == {10}
     # the bridge endpoints join their own cliques, not each other's
     assert out[4] == 1 and out[10] == 10
+
+
+def test_shortest_path_null_order_keys_follow_join(spark, sf_dir, tmp_path):
+    """NULL l_orderkey rows never pair in the oracle's self-join. Two
+    planted NULL-key rows with consecutive linenumbers would link the
+    source part to a new part if NULL keys formed a group."""
+    li = pq.read_table(os.path.join(sf_dir, "lineitem.parquet"))
+    planted = li.slice(0, 2)
+    for name, values in (
+        ("l_orderkey", [None, None]),
+        ("l_linenumber", [1, 2]),
+        ("l_partkey", [_BFS_SRC, 10**9]),
+    ):
+        i = planted.schema.get_field_index(name)
+        planted = planted.set_column(
+            i, planted.schema.field(i), pa.array(values, planted.schema.field(i).type)
+        )
+    pq.write_table(pa.concat_tables([li, planted]), tmp_path / "lineitem.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{tmp_path}/lineitem.parquet')"
+    )
+    want = con.execute(QUERIES["q_shortest_path"].oracle).df()
+    con.close()
+    assert 10**9 not in set(want["node"])
+    assert compare(q_shortest_path(spark, str(tmp_path)), want) == []

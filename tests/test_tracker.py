@@ -17,6 +17,7 @@ import pandas as pd
 import pytest
 
 from iceberg_tracking_spark.tracker.batch import (
+    SequenceTracker,
     TrackerConfig,
     track_one_sequence_pdf,
     track_sequences,
@@ -98,6 +99,25 @@ def test_one_to_one_per_frame():
     assert (per_frame_tracks == per_frame_rows).all()
     per_frame_dets = out.groupby("frame")["det_id"].nunique()
     assert (per_frame_dets == per_frame_rows).all()
+    # Exact score tie: object 1's detection in frame 15 repeated with the
+    # same det_id and box, at the lower index and with conf 0.5. det_ids
+    # may repeat within a frame, so the greedy key ends with the
+    # detection index and the lower index wins.
+    tracker = SequenceTracker(TrackerConfig())
+    for frame, g in pdf.groupby("frame", sort=True):
+        g = g.sort_values("obj_id", kind="mergesort")
+        if frame == "000015":
+            g = pd.concat([g[g["obj_id"] == 1015].assign(conf=0.5), g])
+        emitted = tracker.step(
+            frame,
+            g[["bb_left", "bb_top", "bb_width", "bb_height"]].to_numpy(float),
+            g["obj_id"].to_numpy(),
+            g["conf"].to_numpy(float),
+        )
+        if frame == "000015":
+            by_track = {r[1]: (r[2], r[7]) for r in emitted}
+            assert by_track[1] == (1015, 0.5)
+            assert (1015, 0.9) in [v for k, v in by_track.items() if k != 1]
 
 
 def test_min_track_length_filter():

@@ -1,15 +1,16 @@
 #!/usr/bin/env python
-"""Round-12 optimization probe: capture `.explain("formatted")` and
-min-of-3 timings for named queries (bench methodology: full `.count()`
-action per run, fresh Catalyst plan each run; optional noop-sink timing
-to separate compute from the count action, guide §1.4).
+"""Optimization probe: capture `.explain("formatted")` and min-of-3
+timings for named queries (bench methodology: full `.count()` action per
+run, fresh Catalyst plan each run; noop-sink timing to separate compute
+from the count action, guide §1.4).
 
 Usage:
-    python tools_r12_probe.py TAG q_name [q_name ...]
+    python tools_probe.py ROUND TAG q_name [q_name ...]
 
-Writes plans/r12/<q>_<TAG>.txt and prints one timing line per query.
-TAG is `before` / `after` (the judge-facing artifacts) or any scratch
-label. SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS honored as in bench.py.
+Writes plans/<ROUND>/<q>_<TAG>.txt (ROUND is the plan-dump directory,
+e.g. `r13`) and prints one timing line per query. TAG is `before` /
+`after` or any scratch label. SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS are
+honored as in bench.py.
 """
 
 from __future__ import annotations
@@ -30,11 +31,12 @@ RUNS = 3
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    outdir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r12")
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    round_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    outdir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", round_dir)
     os.makedirs(outdir, exist_ok=True)
-    spark = get_spark(app_name="r12_probe")
+    spark = get_spark(app_name=f"{round_dir}_probe")
     spark.sparkContext.setLogLevel("ERROR")
     # same warm-up as bench.py
     spark.range(1000).count()
