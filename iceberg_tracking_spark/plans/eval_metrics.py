@@ -205,15 +205,6 @@ def clear_identity_metrics(
     if matches is None:
         matches = matched_pairs(gt, tracks, iou_threshold, prefilter_cell)
 
-    counts = (
-        gt.groupBy("sequence").agg(F.count(F.lit(1)).alias("n_gt"))
-        .join(
-            tracks.groupBy("sequence").agg(F.count(F.lit(1)).alias("n_det")),
-            "sequence",
-            "outer",
-        )
-    )
-
     # The expensive matches relation is consumed ONCE, by a single
     # linear pipeline — no persist/cache to manage (a previous version
     # persisted `matches` for three aggregation branches and leaked the
@@ -275,7 +266,8 @@ def clear_identity_metrics(
     )
 
     # MT/PT/ML coverage needs every GT, matched or not (reference
-    # eval.py:319-349) — left join from the per-GT frame totals.
+    # eval.py:319-349) — left join from the per-GT frame totals, which
+    # also sum to n_gt (no second gt scan).
     gt_frames = gt.groupBy("sequence", "gt_id").agg(
         F.count(F.lit(1)).alias("n_frames")
     )
@@ -286,7 +278,12 @@ def clear_identity_metrics(
         F.coalesce(F.col("n_matched"), F.lit(0)).cast("double")
         / F.col("n_frames"),
     )
+    # A NULL-sequence GT never matches (the pairing joins on sequence)
+    # and its row is the gt side of a NULL-key full outer join, so it
+    # reports no coverage bucket: ml counts keyed GTs only.
+    keyed = F.col("sequence").isNotNull()
     seq_stats = per_gt_full.groupBy("sequence").agg(
+        F.sum("n_frames").alias("n_gt"),
         F.sum("n_matched").alias("tp"),
         F.round(F.sum("sum_iou") / F.sum("n_matched"), 6).alias("loca"),
         F.sum("idsw_gt").alias("idsw"),
@@ -295,11 +292,12 @@ def clear_identity_metrics(
         F.sum(
             F.when((F.col("ratio") >= 0.2) & (F.col("ratio") < 0.8), 1).otherwise(0)
         ).alias("pt"),
-        F.sum(F.when(F.col("ratio") < 0.2, 1).otherwise(0)).alias("ml"),
+        F.sum(F.when(keyed & (F.col("ratio") < 0.2), 1).otherwise(0)).alias("ml"),
         F.sum("best_run").alias("idtp"),
     )
 
-    out = counts.join(seq_stats, "sequence", "left").na.fill(
+    n_det = tracks.groupBy("sequence").agg(F.count(F.lit(1)).alias("n_det"))
+    out = seq_stats.join(n_det, "sequence", "outer").na.fill(
         {"tp": 0, "idsw": 0, "frag": 0, "mt": 0, "pt": 0, "ml": 0, "idtp": 0}
     )
     return out.select(

@@ -15,6 +15,12 @@ the ones that matter at cluster scale too:
 * Generated-code cache keyed without stage ids and sized above the
   workloads' working sets (see `get_spark`), so a warm op reuses its
   compiled classes.
+* Python workers fork from `worker_daemon`, which stops each task from
+  re-reading the pyspark.zip/py4j archive directories (see `get_spark`);
+  the package's parent directory goes on the workers' PYTHONPATH so the
+  daemon can import it.
+* DataFrame call-site capture off: no py4j round trips per Column or
+  ``functions`` call while plans are built (see `get_spark`).
 * Session timezone pinned to UTC so timestamp semantics agree with the
   DuckDB oracle (DuckDB timestamps are UTC-naive).
 """
@@ -24,6 +30,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH_KEY = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -56,10 +65,36 @@ def get_spark(
     four to six passes at 1000 entries: 162 MB (pipeline), 157 MB and
     147 MB (the two query mixes); at Spark's defaults the pipeline used
     162-164 MB, so the larger cache costs no measurable Metaspace.
+
+    Two settings cut the fixed cost of the Python-JVM boundary.
+
+    * ``spark.python.daemon.module``: workers fork from
+      `iceberg_tracking_spark.worker_daemon`, which keeps each task's
+      ``importlib.invalidate_caches()`` from re-reading the directories
+      of the archives on the workers' path (pyspark.zip, py4j and the
+      spark-core jar: 16 ``zipimporter`` objects, 26,672 entries per
+      task on Python 3.11). A warm two-task job on ``local[2]`` fell
+      from 0.41-0.50 s to 0.11-0.12 s on a 4-vCPU host. If the daemon
+      cannot import this package every Python task fails, so its parent
+      directory is merged into ``spark.executorEnv.PYTHONPATH``.
+    * ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark
+      wraps every ``Column`` method and ``functions`` call to record its
+      Python call site, about four py4j round trips each (active
+      session, conf read, origin set and clear). Building the MOT
+      pipeline's CLEAR / Identity eval plan (read MOT CSVs -> metrics)
+      made 3,487 round trips with capture on and 1,237 with it off.
+      Errors keep their error class and message; they lose only the
+      "DataFrame call site" ``file:line`` context.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
+    extra_conf = dict(extra_conf or {})
+    # Python workers start in `worker_daemon`, so they must import this
+    # package wherever the driver was launched from.
+    worker_path = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, extra_conf.pop(_WORKER_PATH_KEY, None)) if p
+    )
 
     builder = (
         SparkSession.builder.master(master)
@@ -75,12 +110,15 @@ def get_spark(
         .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "iceberg_tracking_spark.worker_daemon")
+        .config(_WORKER_PATH_KEY, worker_path)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Driver testdata stores events.ts as INT64 TIMESTAMP(NANOS); Spark
         # has no nanos timestamp — read as long, converted in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

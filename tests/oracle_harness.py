@@ -47,10 +47,29 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
+def _dtype_class(dt) -> str:
+    if pd.api.types.is_bool_dtype(dt):
+        return "bool"
+    if pd.api.types.is_integer_dtype(dt):
+        return "int"
+    if pd.api.types.is_float_dtype(dt):
+        return "float"
+    return "other"
+
+
+def _dtype_mismatch(a, b) -> bool:
+    """The driver hashes typed values, so int vs float vs bool is a
+    mismatch even when the values agree; an int column also mismatches
+    any non-int one."""
+    ca, cb = _dtype_class(a), _dtype_class(b)
+    return ca != cb and ("int" in (ca, cb) or "other" not in (ca, cb))
+
+
 def compare(spark_df, oracle_df: pd.DataFrame, rel_tol: float = 1e-9) -> list[str]:
-    """Return a list of mismatch descriptions (empty = pass)."""
+    """Return a list of mismatch descriptions (empty = pass). `spark_df`
+    is a Spark DataFrame or its already-fetched pandas frame."""
     issues: list[str] = []
-    sp = spark_df.toPandas()
+    sp = spark_df if isinstance(spark_df, pd.DataFrame) else spark_df.toPandas()
     if len(sp) != len(oracle_df):
         issues.append(f"row count: spark={len(sp)} oracle={len(oracle_df)}")
     if sorted(sp.columns) != sorted(oracle_df.columns):
@@ -69,7 +88,7 @@ def compare(spark_df, oracle_df: pd.DataFrame, rel_tol: float = 1e-9) -> list[st
         # HUGEINT sum) is a driver-visible mismatch even when every
         # value agrees — flag it here so it never reaches the driver
         # (caught for real in r7: q_length_buckets pad_tokens).
-        if pd.api.types.is_integer_dtype(av) != pd.api.types.is_integer_dtype(bv):
+        if _dtype_mismatch(av.dtype, bv.dtype):
             issues.append(
                 f"col {c}: dtype class mismatch spark={av.dtype} "
                 f"oracle={bv.dtype} (cast the oracle side: DuckDB "

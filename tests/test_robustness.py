@@ -65,6 +65,45 @@ def test_eval_metrics_no_matches(spark):
     assert row["idtp"] == 0 and row["mt"] == 0 and row["ml"] == 1
 
 
+def test_eval_metrics_null_keys_and_one_sided_sequences(spark):
+    """Pinned rows for NULL `sequence`, NULL `gt_id`, a gt-only and a
+    tracks-only sequence. n_gt comes from the per-GT frame totals; a
+    NULL-sequence GT never matches and still reports mt = pt = ml = 0,
+    on its own row apart from the NULL-sequence tracks (NULL keys do not
+    join)."""
+    gt_ddl = "sequence string, frame long, gt_id int, l double, t double, w double, h double"
+    tr_ddl = "sequence string, frame long, track_id int, l double, t double, w double, h double"
+    box, far, mid = (0.0, 0.0, 10.0, 10.0), (500.0, 500.0, 10.0, 10.0), (100.0, 100.0, 10.0, 10.0)
+    gt = spark.createDataFrame(
+        [("a", f, 1, *box) for f in range(1, 6)]
+        + [("a", f, 2, *far) for f in range(1, 6)]
+        + [("a", f, None, *mid) for f in (1, 2)]
+        + [("g", f, 3, *box) for f in (1, 2)]
+        + [(None, f, 5, *box) for f in (1, 2)],
+        gt_ddl,
+    )
+    tr = spark.createDataFrame(
+        [("a", f, 10, *box) for f in range(1, 6)]
+        + [("a", 1, 11, *far)]
+        + [("a", f, 12, *mid) for f in (1, 2)]
+        + [("t", 1, 20, *box), (None, 1, 21, *box)],
+        tr_ddl,
+    )
+    out = clear_identity_metrics(gt, tr)
+    assert out.columns == [
+        "sequence", "n_gt", "n_det", "tp", "fn", "fp", "clr_re", "clr_pr", "loca",
+        "idsw", "frag", "mt", "pt", "ml", "idtp", "idf1",
+    ]
+    got = sorted((tuple(r) for r in out.collect()), key=repr)
+    assert got == [
+        ("a", 12, 8, 6, 6, 2, 0.5, 0.75, 1.0, 0, 0, 1, 1, 1, 6, 0.6),
+        ("g", 2, None, 0, 2, None, 0.0, None, None, 0, 0, 0, 0, 1, 0, None),
+        ("t", None, 1, 0, None, 1, None, 0.0, None, 0, 0, 0, 0, 0, 0, None),
+        (None, 2, None, 0, 2, None, 0.0, None, None, 0, 0, 0, 0, 0, 0, None),
+        (None, None, 1, 0, None, 1, None, 0.0, None, 0, 0, 0, 0, 0, 0, None),
+    ]
+
+
 def test_asof_join_no_prior_rows(spark):
     # Every left row precedes every right row → inner as-of drops all.
     left = spark.createDataFrame([(1, 5)], "k long, t long")

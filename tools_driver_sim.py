@@ -1,12 +1,14 @@
 """Simulates the driver's verify: vanilla SparkSession (driver's own conf,
 NOT ours), import __spark_entry__, smoke entry(), then run every query at
 sf0.01 (override: SPARK_GRAFT_SIM_SF_DIR) vs oracle_sql() through DuckDB,
-hash-style compare. Run from /root/repo so Python workers can import the
-package."""
-import os, sys, time, math
-sys.path.insert(0, "/root/repo")
+compared by `tests/oracle_harness.compare`. Run from the repository root
+so Python workers can import the package."""
+import os, sys, time
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 from pyspark.sql import SparkSession
-import duckdb, pandas as pd
+
+from tests.oracle_harness import compare, duck_connection
 
 spark = (SparkSession.builder.master("local[8]")
          .appName("driver_sim")
@@ -27,30 +29,8 @@ qs, oracles = E.queries(), E.oracle_sql()
 print(f"{len(qs)} queries, {len(oracles)} with oracle")
 assert set(oracles) <= set(qs)
 
-sf = os.environ.get("SPARK_GRAFT_SIM_SF_DIR", "/root/testdata/sf0.01")
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
-
-def norm(df):
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = pd.to_datetime(df[c]).astype("datetime64[us]").astype("int64")
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-
-def dtype_class(dt):
-    """Driver hashes typed values: int64 vs float64 is a mismatch even when
-    values are numerically equal. Classify dtypes so int-vs-float fails."""
-    if pd.api.types.is_bool_dtype(dt):
-        return "bool"
-    if pd.api.types.is_integer_dtype(dt):
-        return "int"
-    if pd.api.types.is_float_dtype(dt):
-        return "float"
-    return "other"
+sf = os.environ.get("SPARK_GRAFT_SIM_SF_DIR", os.path.join(os.path.dirname(ROOT), "testdata", "sf0.01"))
+con = duck_connection(sf)
 
 fails = []
 for name in (sys.argv[1:] or sorted(qs)):
@@ -61,25 +41,9 @@ for name in (sys.argv[1:] or sorted(qs)):
         fails.append((name, f"SPARK ERROR: {ex}")); print(f"FAIL {name}: spark error {ex}"); continue
     if name not in oracles:
         print(f"rows-only {name}: {len(sp)} rows  ({time.time()-t0:.1f}s)"); continue
-    od = con.execute(oracles[name]).fetchdf()
-    a, b = norm(sp), norm(od)
-    ok = len(a) == len(b) and list(a.columns) == list(b.columns)
-    reason = f"mismatch rows sp={len(a)} or={len(b)}"
-    if ok:
-        for c in a.columns:
-            ca, cb = dtype_class(a[c].dtype), dtype_class(b[c].dtype)
-            if ca != cb and {ca, cb} <= {"int", "float", "bool"}:
-                ok = False
-                reason = f"dtype mismatch col={c} spark={a[c].dtype} oracle={b[c].dtype}"
-                break
-            if pd.api.types.is_float_dtype(a[c]) or pd.api.types.is_float_dtype(b[c]):
-                av = pd.to_numeric(a[c]).astype(float); bv = pd.to_numeric(b[c]).astype(float)
-                if not all((math.isnan(x) and math.isnan(y)) or x==y or math.isclose(x,y,rel_tol=1e-9,abs_tol=1e-9) for x,y in zip(av,bv)):
-                    ok = False; break
-            elif (a[c].astype(str) != b[c].astype(str)).any():
-                ok = False; break
-    status = "OK  " if ok else "FAIL"
-    if not ok: fails.append((name, reason))
+    issues = compare(sp, con.execute(oracles[name]).fetchdf())
+    status = "OK  " if not issues else "FAIL"
+    if issues: fails.append((name, issues[0]))
     print(f"{status} {name}: {len(sp)} rows  ({time.time()-t0:.1f}s)")
 
 print(f"\n{'ALL PASS' if not fails else 'FAILURES: ' + str(fails)}")
