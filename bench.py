@@ -3,9 +3,9 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. The FINAL
 stdout line is the compact contract JSON: {"metric": ..., "value":
 total_sec, "unit": "sec", "queries": {name: sec}, "sf": ..., "cpus":
-...} (≈0.6 KB so the driver's output-tail capture can never truncate
-it again — see the note at the end of main()); the line before it is
-the full document with the extended per-query map and noise forensics.
+...} (≈0.6 KB so a reader that keeps only the tail of the output can
+never truncate it — see the note at the end of main()); the line
+before it is the full document with the extended per-query map.
 
 Headline set: one representative per operator family — scan-agg, join,
 window/argmax, islands, spatial join, sessionization, dedup (minhash),
@@ -15,6 +15,12 @@ number is the min of 3 runs, which strips co-tenant load spikes and
 one-time whole-stage-codegen compilation while still re-planning every
 query from scratch (steady-state cost, the figure that matters for a
 repeated production workload).
+
+Wall time here is reported, not gated: it swings 1.5-2x with host
+load. Plan regressions in every benched query are caught by
+`tests/test_work_counters.py`, which compares deterministic work
+counters (jobs, stages, input rows, file scans, exchanges) against the
+checked-in `tests/work_baseline.json`.
 """
 
 from __future__ import annotations
@@ -40,9 +46,7 @@ HEADLINE = [
     "q_cosine_topk",
     "q_iou_argmax",
     "q_rollup",
-    # scale-path additions: as-of (union+window), LSH-bucketed ANN,
-    # token accounting, the full eval-metrics relational job, and the
-    # five-way star join
+    # as-of join, LSH ANN, token accounting, eval metrics, star join
     "q_asof_join",
     "q_ann_lsh",
     "q_token_count",
@@ -50,10 +54,10 @@ HEADLINE = [
     "q_star_join",
 ]
 
-# Secondary set (min-of-3 timings in the "extended" key): one
-# representative per round-4 family — graph, interval join, fuzzy
-# match, sketches, real media decode, hybrid retrieval.
+# Secondary set (min-of-3 timings in the "extended" key of the full
+# document): one representative per newer operator family.
 EXTENDED = [
+    # graph, interval join, fuzzy match, sketches, media, hybrid retrieval
     "q_pagerank",
     "q_interval_join",
     "q_fuzzy_match",
@@ -62,8 +66,7 @@ EXTENDED = [
     "q_count_min",
     "q_image_decode",
     "q_rrf_fusion",
-    # round-5 additions (floored): distributed ranking, sharded
-    # packing, histogram sketch, BPE learning, data mixing
+    # distributed ranking, packing, histogram sketch, BPE, data mixing
     "q_auc",
     "q_pack_sequences",
     "q_pack_sequences_sharded",
@@ -74,13 +77,11 @@ EXTENDED = [
     "q_training_manifest",
     "q_ann_recall",
     "q_ann_recall_multiprobe",
-    # round-6 additions: AP, reference-faithful identity metrics,
-    # multi-sequence COMBINED rollup (floored from their first solo
-    # sf0.1 recordings, same round)
+    # detection / tracking eval
     "q_average_precision",
     "q_eval_identity",
     "q_eval_combined",
-    # round-6 second wave: sketch/gate/curation families
+    # sketches, gates, curation
     "q_heavy_hitters",
     "q_bloom_pruned_join",
     "q_neardup_gate",
@@ -88,7 +89,7 @@ EXTENDED = [
     "q_chunk_documents",
     "q_retrieval_metrics",
     "q_ann_ivf_recall",
-    # round-6 third wave: feature-engineering / eval / graph family
+    # feature engineering, eval, graph
     "q_target_encoding",
     "q_feature_hashing",
     "q_lag_features",
@@ -100,8 +101,7 @@ EXTENDED = [
     "q_item_similarity",
     "q_seasonal_decompose",
     "q_bpe_encode",
-    # round-6 fourth wave: grouped OLS, information-theoretic feature
-    # selection, quantile binning, skew diagnostic, conformal calibration
+    # regression, feature selection, binning, drift, experimentation stats
     "q_linear_fit",
     "q_mutual_information",
     "q_quantile_binning",
@@ -118,20 +118,18 @@ EXTENDED = [
     "q_poisson_bootstrap",
     "q_anova",
     "q_chi2_independence",
-    # round-7: real PNG decode (stdlib zlib + numpy unfilter),
-    # int8 quantization, batching audit, exact-substring span removal
+    # media decode, quantization, batching, span dedup
     "q_png_decode",
     "q_int8_quantize",
     "q_length_buckets",
     "q_dup_span_removal",
-    # round-7 second wave: ALS normal-equations half-step and BH FDR
+    # ALS half-step, FDR control
     "q_als_step",
     "q_benjamini_hochberg",
-    # round-7 third wave: minhash estimator fidelity, sequential test
+    # sketch fidelity, sequential testing
     "q_minhash_fidelity",
     "q_msprt",
-    # round-8: rank-sum test, Benford audit, autocorrelation, Slope One,
-    # confusion/F1 sweep, k-NN label eval, Zipf corpus audit
+    # rank tests, audits, autocorrelation, recommenders, classifier eval
     "q_mann_whitney",
     "q_benford",
     "q_acf",
@@ -139,10 +137,9 @@ EXTENDED = [
     "q_confusion_matrix",
     "q_knn_accuracy",
     "q_zipf_fit",
-    # round-9: real GIF decode (general LZW + literal-LZW oracle path)
+    # GIF decode
     "q_gif_decode",
-    # round-9 stats/graph/calibration wave: Spearman, Kruskal-Wallis,
-    # permutation test, isotonic PAV, Adamic-Adar, HITS
+    # rank statistics, calibration, graph link scores, video
     "q_spearman",
     "q_kruskal_wallis",
     "q_permutation_test",
@@ -152,20 +149,17 @@ EXTENDED = [
     "q_theil_sen",
     "q_video_motion",
     "q_label_propagation",
-    # round-10: animated GIF per-frame decode, lossless-WebP decode,
-    # and the stats wave (binned tau-b, Cliff's delta, JSD)
+    # animated GIF, WebP, association statistics
     "q_gif_frames",
     "q_webp_decode",
     "q_kendall_tau",
     "q_cliffs_delta",
     "q_js_divergence",
-    # round-11: header-level media cataloging (lossy WebP/VP8X/AVIF),
-    # exact unbinned tau-b on the hash-capped sample, and the
-    # Mann-Kendall trend monitor
+    # media cataloging, exact tau-b, trend monitoring
     "q_media_catalog",
     "q_kendall_exact",
     "q_mann_kendall",
-    # r12: catalog rollup + the paired-rater agreement family
+    # media accounting, paired-rater agreement, change detection
     "q_media_accounting",
     "q_mcnemar",
     "q_cohens_kappa",
@@ -174,272 +168,12 @@ EXTENDED = [
     "q_cusum_prefix",
 ]
 
-# Regression floors for the HEADLINE set (r6 verdict task: the
-# headline deserves the same mechanical >2x flag as the extended set —
-# q_grid_join drifted +0.29s then +0.42s across r5/r6 and only manual
-# delta-reading caught it). Basis: per-query min of the three known
-# solo min-of-3 runs — the r6 judge's own re-measure (13.38s total),
-# the round-7 start-of-round solo run (12.28s), and the round-7
-# end-of-round solo run (11.40s total, best-ever, beating r4's 11.53s
-# — which also confirms the r5/r6 "drift" was co-tenant load, not
-# plan regressions) — i.e. the best demonstrated steady-state on this
-# host. Same semantics as
-# EXTENDED_FLOOR_SEC: >2x floor at sf0.1 lands in "regressions" and on
-# stderr, never a nonzero exit.
-HEADLINE_FLOOR_SEC = {
-    "q_sum_count": 0.411,
-    "q_equijoin": 0.495,
-    "q_theta_argmax": 0.729,
-    "q_islands": 0.605,
-    "q_grid_join": 1.108,
-    "q_session_window": 0.422,
-    "q_minhash_lsh": 0.972,
-    "q_cosine_topk": 0.681,
-    "q_iou_argmax": 1.294,
-    "q_rollup": 0.485,
-    "q_asof_join": 0.708,
-    "q_ann_lsh": 0.972,
-    "q_token_count": 0.26,
-    "q_eval_metrics": 1.489,
-    "q_star_join": 0.572,
-}
 
-# Regression floor for the extended set: each entry's first sf0.1
-# min-of-3 recording, tightened whenever a later observed run beats
-# it (last sweeps: round-13 — three full runs, start canaries
-# 1.55/1.09/0.64s, per-query min across them lowered 11 floors under
-# the any-observation-lowers rule, incl. the r13-rewritten
-# q_rrf_fusion 1.711→1.317, q_psi →1.119, q_kaplan_meier →1.371;
-# round-12 — two full runs, start canaries
-# 0.530s/1.08s, 8 then 16 floors lowered under the refined
-# any-observation-lowers rule; round-10 — min over two full
-# verified-near-idle runs, canary 0.475/0.552s on record, 26 floors
-# tightened and q_auc REBASED upward to its reproducible minimum;
-# before that the round-9 idle sweep of 32 and the round-7 quiet
-# window that re-floored 43 of 61 entries).
-#
-# FLOOR LINEAGE RULE (r10 verdict task #5, formalized r11; refined
-# r12 per the r11 ADVICE + verdict task #3): a floor may be RAISED or
-# REBASED upward only from a run whose recorded canary is <= ~1.2x
-# CANARY_FLOOR_SEC, and every floor group's comment must name its
-# basis canary. LOWERING is different: co-tenant load can only
-# inflate a timing, so ANY observed run is a valid upper bound on
-# the true floor — a floor may be lowered from any recorded
-# observation regardless of its canary (keeping a stale-high floor
-# just moves the 2x bar out of detection range). Basis REGIMEN must
-# match the measurement regimen: floors come from FULL-SWEEP runs
-# (the warm, fixture-cached state the driver measures in); a solo
-# landing-commit recording is PROVISIONAL until the first sweep
-# observation replaces it. Bases recorded before the canary era (the
-# r6-r9 groups above/below without a canary note) carry the weaker
-# "solo run, load observed via control queries" provenance — they are
-# kept as-is and only ever replaced upward by canary-verified runs;
-# do NOT raise from an unverified window. A query running
-# >2x its floor at
-# sf0.1 is flagged loudly in the JSON ("regressions") and on stderr —
-# the 2x budget absorbs the measured 1.5-2x co-tenant load swings, so
-# a flag means a real plan regression, not noise. Deliberately NOT a
-# nonzero exit: the round's numbers must still be recorded (r3 lost an
-# entire round's bench to one failure).
-EXTENDED_FLOOR_SEC = {
-    # re-floored r6 after the single-checkpoint broadcast-degree
-    # reshape (min-of-5 solo recording)
-    "q_pagerank": 2.923,
-    "q_interval_join": 0.745,
-    "q_fuzzy_match": 0.467,
-    "q_char_entropy": 0.496,
-    "q_hll": 0.482,
-    "q_count_min": 0.608,
-    "q_image_decode": 0.403,
-    "q_rrf_fusion": 1.317,
-    # round-5 families: first sf0.1 min-of-3 recordings (local run).
-    # q_auc / q_pack_sequences / q_curriculum re-floored in r6: the
-    # r5 ADVICE fix makes distributed_cumulative collect its percentile
-    # boundaries as a separate (column-pruned, 1-row-output) job so the
-    # bucket ids are plan constants — correctness at multi-executor
-    # scale, bought with one extra job submission per call, which at
-    # sf0.1 is mostly fixed scheduling overhead.
-    "q_auc": 0.577,  # REBASED r10: the 0.537 basis never reproduced again (judge r9 solo 1.02; r10 verified-near-idle 0.944/0.968) — a floor below the reproducible minimum only manufactures false alarms,
-    "q_pack_sequences": 0.885,
-    "q_pack_sequences_sharded": 0.234,
-    "q_histogram_quantiles": 0.39,
-    "q_bpe_learn": 1.195,
-    "q_domain_mixture": 0.478,
-    "q_curriculum": 0.972,
-    "q_training_manifest": 0.588,
-    # ANN recall monitors: first sf0.1 recording = BENCH_r05 (r5
-    # verdict task #2 — every extended entry regression-guarded)
-    "q_ann_recall": 0.892,
-    "q_ann_recall_multiprobe": 0.955,
-    # round-6 metric family: first sf0.1 min-of-3 recordings (solo,
-    # min over two back-to-back bench runs that themselves spanned a
-    # 23% environment swing — see README "Performance")
-    "q_average_precision": 0.658,
-    "q_eval_identity": 2.667,
-    "q_eval_combined": 3.249,
-    # round-6 second wave: first solo sf0.1 min-of-3 recordings
-    # (bloom_pruned_join floored at its post-xxhash-family number)
-    "q_heavy_hitters": 0.769,
-    "q_bloom_pruned_join": 1.159,
-    "q_neardup_gate": 0.929,
-    "q_classifier_score": 0.515,
-    "q_chunk_documents": 0.289,
-    "q_retrieval_metrics": 0.798,
-    "q_ann_ivf_recall": 0.549,
-    # round-6 third wave (first solo sf0.1 recording, min-of-3)
-    "q_target_encoding": 0.254,
-    "q_feature_hashing": 0.463,
-    "q_lag_features": 0.125,
-    "q_item_cooccurrence": 1.338,
-    "q_reliability_ece": 0.721,
-    "q_merge_upsert": 0.278,
-    "q_shortest_path": 2.112,
-    "q_l_diversity": 0.664,
-    "q_item_similarity": 1.43,
-    "q_seasonal_decompose": 0.338,
-    "q_bpe_encode": 1.385,
-    # round-6 fourth wave: min over three sf0.1 min-of-3 recordings,
-    # the last a full solo bench AFTER the distributed_cumulative
-    # binary-search bucket fix (the flat fold was ~linear in n_parts:
-    # q_quantile_binning 3.58s -> 0.63s)
-    "q_linear_fit": 0.246,
-    "q_mutual_information": 0.271,
-    "q_quantile_binning": 0.605,
-    "q_gini_skew": 0.557,
-    "q_conformal": 0.737,
-    "q_ks_test": 0.666,
-    "q_psi": 1.119,
-    "q_markov_transitions": 0.394,
-    "q_attribution": 0.34,
-    "q_dsir_weights": 0.733,
-    # RFM + Kaplan-Meier: first solo sf0.1 min-of-3 recordings (three
-    # resp. two distributed_cumulative passes over bounded relations —
-    # the cost is fixed job overhead, not data volume)
-    "q_rfm": 1.248,
-    "q_kaplan_meier": 1.371,
-    # experimentation stats (first solo sf0.1 min-of-3 recordings)
-    "q_cuped": 0.461,
-    "q_poisson_bootstrap": 0.235,
-    "q_anova": 0.219,
-    "q_chi2_independence": 0.306,
-    # round-7: first solo sf0.1 min-of-3 recordings (png fixture-sized
-    # — decode cost scales with file count, not sf)
-    "q_png_decode": 0.286,
-    "q_int8_quantize": 0.173,
-    "q_length_buckets": 0.281,
-    "q_dup_span_removal": 0.343,
-    # round-7 second wave (first solo sf0.1 min-of-3 recordings; BH is
-    # job-count bound — distributed_cumulative boundary collect +
-    # checkpoint over a 25-row relation, the q_rfm cost note)
-    "q_als_step": 0.65,
-    # re-floored after bh_stepup's input materialization (the codegen
-    # fix: one localCheckpoint cuts the deep p-value expression out of
-    # the rank's bucket tree AND replaces 3 redundant upstream
-    # evaluations with 1 — ~0.45s of fixed job overhead at sf0.1, a
-    # win at real test-family sizes)
-    "q_benjamini_hochberg": 0.955,
-    # round-7 third wave (first solo sf0.1 min-of-3 recordings);
-    # fidelity re-floored r8 after the exact-Jaccard side was bounded
-    # by the candidate set (r7 verdict task #1 — cand routed through
-    # the semi-joined shingle relation, no shingle self-join; solo
-    # min-of-3 2.390s in the same commit as the plan change)
-    "q_minhash_fidelity": 1.567,
-    "q_msprt": 0.871,
-    # round-8 first solo sf0.1 min-of-3 recordings, same commit as the
-    # queries landed (slope_one's basis includes the target-item
-    # semi-join bound on the deviation pair fan)
-    # (mann_whitney re-floored in the same round after its grid/rank
-    # stages moved to operators/stats.py:mw_grid+mw_from_grid)
-    "q_mann_whitney": 0.369,
-    "q_benford": 0.314,
-    # acf re-floored after the decimal-before-sum overflow fix
-    # (solo min-of-3 in the same commit)
-    "q_acf": 0.488,
-    "q_slope_one": 3.939,
-    "q_confusion_matrix": 0.563,
-    "q_knn_accuracy": 0.728,
-    "q_zipf_fit": 0.579,
-    # r9 landing: solo min-of-3 at sf0.1 in the landing commit
-    # (0.862s; first run 9.0s is fixture+listing warm-up, absorbed by
-    # the harness's min-of-3)
-    "q_gif_decode": 0.314,
-    # r9 stats/graph wave: first solo sf0.1 min-of-3 recordings (host
-    # showed residual load-average ~1-8 from the same-session pytest
-    # sweep; tighten from a quieter end-of-round solo run if one lands)
-    "q_spearman": 1.809,
-    "q_kruskal_wallis": 0.472,
-    "q_permutation_test": 0.557,
-    "q_isotonic_calibration": 0.991,
-    "q_adamic_adar": 2.024,
-    "q_hits": 1.825,
-    "q_theil_sen": 0.523,
-    "q_video_motion": 0.315,
-    "q_label_propagation": 2.213,
-    # r10 landing: solo min-of-3 at sf0.1 in the landing commit, on a
-    # load-3.4 host (fixture-sized decode; tighten from an idle run)
-    "q_gif_frames": 0.279,
-    "q_webp_decode": 0.377,
-    "q_kendall_tau": 0.53,
-    "q_cliffs_delta": 0.222,  # re-floored on the one-pass plan (window totals replace the join-back; idle canary 0.482 on record),
-    "q_js_divergence": 0.573,  # re-floored on the scan-once plan: the grid localCheckpoint is ~0.4s of fixed job overhead at sf0.1 that buys 1 corpus scan instead of 4 at real scale (the q_rfm cost note),
-    # RE-FLOORED r12: the query moved to the bounded head-bytes scan
-    # (list_files + ranged reads — the r11 verdict's task #2), so the
-    # r11 binaryFile-plan basis (0.348) measured a different plan;
-    # basis = the r12 full sweep (start canary 0.530s).
-    "q_media_catalog": 0.548,
-    # RE-FLOORED r12 from the SWEEP regimen (r11 verdict task #3 +
-    # ADVICE #3): the r11 solo-landing bases (2.366s / 2.731s) sat
-    # 1.8-3.7x above every full-sweep observation — driver BENCH_r11
-    # 1.337s / 0.747s, judge sweep 1.229s / 0.734s — leaving the 2x
-    # bars toothless. Load only inflates timings, so the sweep
-    # observations are valid upper bounds on the true floors and the
-    # refined lineage rule lowers from them regardless of canary;
-    # first lowered to the judge-sweep minima (1.229/0.734), then the
-    # r12 full sweep (start canary 0.530s) beat both — its minima are
-    # the current bases. (mann_kendall's cost is the bounded
-    # cell-pair join: |days|x|value grid| squared per segment, fixed
-    # by window and range, not volume.)
-    "q_kendall_exact": 1.091,
-    "q_mann_kendall": 0.635,
-    # r12 landing: first FULL-SWEEP sf0.1 recording (the refined
-    # lineage rule's required regimen), start-of-run canary 0.530s
-    # (1.12x floor) — the sweep crossed mid-run co-tenant waves
-    # (recheck canaries up to 6.47s on record in the run's JSON), so
-    # these bases are upper bounds; lower from any later observation.
-    # q_media_catalog's floor moved to the head-bytes-scan plan in the
-    # same sweep (listing+ranged reads replace the binaryFile content
-    # scan; the old 0.348 basis measured a different plan).
-    "q_media_accounting": 0.605,
-    "q_mcnemar": 0.21,
-    "q_cohens_kappa": 0.252,
-    "q_cochran_q": 0.227,
-    "q_friedman": 0.353,
-    # q_cusum_prefix landed after sweep-1: basis = the round's SECOND
-    # full sweep (in-sweep 0.288s; a solo bracketed run the same night
-    # measured 1.016s at canaries 0.511-0.554s — sweep-warm vs solo is
-    # exactly the regimen gap the lineage rule now encodes, and the
-    # sweep number is the regimen the driver measures).
-    "q_cusum_prefix": 0.288,
-}
-
-
-# ----------------------------------------------------------- host canary
-# Floors are idle-host minima, but the driver's per-round bench runs on
-# whatever co-tenant load the host has that day — r9 recorded 4 spurious
-# ">2x floor" breaches on a host independently measured (control queries)
-# at 1.8-1.9x its idle speed. Policy (r9 verdict task #3): time a FIXED
-# SYNTHETIC canary first — pure spark.range shuffle+aggregate, zero repo
-# code in the plan, so repo regressions cannot move it — and derive
-# host_factor = max(1, canary / CANARY_FLOOR_SEC). A query lands in
-# "regressions" only when BOTH its raw time AND its canary-scaled time
-# (raw / host_factor) exceed 2x its floor; raw-only breaches are recorded
-# separately under "host_noise_suspects" so nothing is silently dropped.
-# Co-tenant load on this host arrives in WAVES (measured r10: idle
-# canary 0.475s, then 3.0s six minutes later), so a start-of-run canary
-# can miss a mid-run wave: whenever a raw breach is detected, the
-# canary is RE-TIMED on the spot and the scaled test uses the larger
-# of the two factors (recheck values recorded under canary_rechecks).
-CANARY_FLOOR_SEC = 0.475  # min across verified-near-idle r10 runs
+# Host canary: a fixed synthetic shuffle+aggregate with no repo code in
+# its plan, timed once before the queries. It records how loaded the
+# host was (host_factor = canary / its idle minimum) so a reader can
+# scale the run's wall times; it gates nothing.
+CANARY_FLOOR_SEC = 0.475  # idle-host minimum of the canary
 
 
 def _canary_sec(spark) -> float:
@@ -458,41 +192,6 @@ def _canary_sec(spark) -> float:
     return best
 
 
-def _previous_bench() -> tuple[str, dict] | None:
-    """Latest BENCH_r*.json next to this script, parsed, or None."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best: tuple[int, str] | None = None
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            r = int(m.group(1))
-            if best is None or r > best[0]:
-                best = (r, p)
-    if best is None:
-        return None
-    try:
-        with open(best[1]) as f:
-            doc = json.load(f)
-        parsed = doc.get("parsed") or doc
-        if isinstance(parsed.get("queries"), dict):
-            return f"r{best[0]:02d}", parsed
-    except (OSError, json.JSONDecodeError, AttributeError):
-        pass
-    return None
-
-
-FLAG_ABS_SLACK_SEC = 0.45
-
-
-def _bar(floor: float) -> float:
-    """Regression-flag bar: 2x the floor plus fixed-overhead slack
-    (see the policy note in main); floors > ~0.45s are pure 2x."""
-    return max(2 * floor, floor + FLAG_ABS_SLACK_SEC)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -507,15 +206,12 @@ def main() -> None:
     load_table(spark, sf_dir, "lineitem").limit(1000).count()
     load_table(spark, sf_dir, "events").limit(1000).count()
     # min of 3 runs per query: this host shows 1.5-2x transient-load
-    # swings across identical code (measured 12.6->19.7s totals within
-    # one hour on round 4), and the min is the standard estimator for
-    # stripping co-tenant noise from a fixed workload. Every run
-    # executes the full action from a cold plan; `runs_per_query`
-    # records the method.
+    # swings across identical code, and the min is the standard
+    # estimator for stripping co-tenant noise from a fixed workload.
+    # Every run executes the full action from a cold plan;
+    # `runs_per_query` records the method.
     RUNS = 3
     errors: dict[str, str] = {}
-    regressions: dict[str, str] = {}
-    host_noise_suspects: dict[str, str] = {}
     canary = round(_canary_sec(spark), 3)
     host_factor = max(1.0, canary / CANARY_FLOOR_SEC)
     print(
@@ -524,89 +220,9 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    # Flag bar: 2x multiplicative PLUS an absolute slack for the
-    # fixed-overhead class (r11). A pure 2x budget fails its own
-    # design goal on queries whose sf0.1 floor is ~0.2-0.35s: those
-    # timings are dominated by per-session JVM/JIT state, not data
-    # work, and one cold-codegen hiccup exceeds 2x a 0.17s floor even
-    # on an idle host (adjudicated r11: q_int8_quantize /
-    # q_length_buckets / q_dup_span_removal flagged while an
-    # identical-code r10 worktree measured the SAME times at a
-    # closing canary of 0.455-0.471s — environment, not plan; a
-    # 5-repeat run decayed toward the floor as JIT warmed). A real
-    # plan regression on such a query (an added corpus shuffle or
-    # join) costs far more than 0.45s at sf0.1, so the slack costs no
-    # detection power; for floors above ~0.45s the 2x term dominates
-    # and nothing changes.
-    canary_rechecks: dict[str, float] = {}
-    flag_reruns: dict[str, float] = {}
-
-    def _suspect(name: str, msg: str) -> None:
-        host_noise_suspects[name] = msg
-        print(f"# host-noise suspect {name}: {msg}", file=sys.stderr)
-
-    def _check_floor(name: str, t: float, floor: float | None) -> None:
-        if sf != "0.1" or floor is None or t <= _bar(floor):
-            return
-        # Raw breach. Step 1: re-time the canary NOW — a co-tenant
-        # load wave that started after the opening canary would
-        # otherwise read as a plan regression.
-        recheck = round(_canary_sec(spark), 3)
-        canary_rechecks[name] = recheck
-        factor = max(host_factor, recheck / CANARY_FLOOR_SEC, 1.0)
-        if t / factor <= _bar(floor):
-            _suspect(
-                name,
-                f"{t:.3f}s > bar {_bar(floor):.3f}s (floor {floor:.3f}s) raw, "
-                f"but canary-scaled "
-                f"{t / factor:.3f}s clears (factor {factor:.2f}, recheck "
-                f"canary {recheck:.3f}s)",
-            )
-            return
-        # Step 2: the wave may have ENDED between the measurement and
-        # the recheck, or be OSCILLATING (measured r10: canary 0.5s
-        # and 2.6s within one bench run) — re-time the QUERY itself,
-        # each run BRACKETED by canaries, so every measurement window
-        # carries its own load factor. A real plan regression breaches
-        # in every window; a wave artifact clears in at least one.
-        try:
-            windows: list[tuple[float, float]] = [(t, factor)]
-            c_prev = recheck
-            fresh_best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                QUERIES[name].fn(spark, sf_dir).count()
-                q = time.perf_counter() - t0
-                c_next = _canary_sec(spark)
-                windows.append(
-                    (q, max(1.0, max(c_prev, c_next) / CANARY_FLOOR_SEC))
-                )
-                c_prev = c_next
-                fresh_best = min(fresh_best, q)
-            flag_reruns[name] = round(fresh_best, 3)
-            canary_rechecks[name] = round(max(recheck, c_prev), 3)
-        except Exception:  # noqa: BLE001 — keep the original flag
-            pass
-        if any(v <= _bar(floor) or v / f <= _bar(floor) for v, f in windows):
-            best_v, best_f = min(windows, key=lambda wf: wf[0] / wf[1])
-            _suspect(
-                name,
-                f"{t:.3f}s > bar {_bar(floor):.3f}s (floor {floor:.3f}s) raw, "
-                f"but a bracketed "
-                f"re-run window clears ({best_v:.3f}s at factor "
-                f"{best_f:.2f}) — wave artifact, not a plan regression",
-            )
-            return
-        regressions[name] = (
-            f"{t:.3f}s > bar {_bar(floor):.3f}s (floor {floor:.3f}s) — breaches in EVERY "
-            "canary-bracketed window: "
-            + ", ".join(f"{v:.3f}s@x{f:.2f}" for v, f in windows)
-        )
-        print(f"# REGRESSION {name}: {regressions[name]}", file=sys.stderr)
-
     for name in HEADLINE:
         # Per-query isolation: one failing query must never zero the
-        # whole round's record (r3 lost all 15 numbers to one type bug).
+        # whole run's record.
         q = QUERIES[name]
         best = float("inf")
         n = 0
@@ -621,12 +237,10 @@ def main() -> None:
             continue
         timings[name] = round(best, 3)
         print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)
-        _check_floor(name, timings[name], HEADLINE_FLOOR_SEC.get(name))
     total = round(sum(timings.values()), 3)
     # Secondary, NON-headline timings for the newer operator families
     # (min-of-3, same discipline as the headline set; the headline
-    # metric and set stay fixed so round-over-round ratios remain
-    # comparable). Checked against EXTENDED_FLOOR_SEC at sf0.1.
+    # metric and set stay fixed so run-over-run ratios remain comparable).
     extended: dict[str, float] = {}
     for name in EXTENDED:
         try:
@@ -637,7 +251,6 @@ def main() -> None:
                 best = min(best, time.perf_counter() - t0)
             extended[name] = round(best, 3)
             print(f"# ext {name}: {extended[name]:.3f}s", file=sys.stderr)
-            _check_floor(name, extended[name], EXTENDED_FLOOR_SEC.get(name))
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
     doc = {
@@ -653,46 +266,15 @@ def main() -> None:
         "canary_floor_sec": CANARY_FLOOR_SEC,
         "host_factor": round(host_factor, 3),
     }
-    if regressions:
-        doc["regressions"] = regressions
-    if host_noise_suspects:
-        doc["host_noise_suspects"] = host_noise_suspects
-    if canary_rechecks:
-        doc["canary_rechecks"] = canary_rechecks
-    if flag_reruns:
-        doc["flag_reruns"] = flag_reruns
     if errors:
         doc["errors"] = errors
-    # Round-over-round deltas vs the latest recorded BENCH_r*.json (same
-    # sf only — the per-round record runs at sf0.1). Sign convention:
-    # negative = faster than the previous round. Machine-visible
-    # regressions; note single-run timings at this scale carry 2-3×
-    # transient-load noise (README "Performance"), so deltas flag
-    # candidates, not verdicts.
-    prev = _previous_bench()
-    if prev is not None and prev[1].get("sf") == doc["sf"]:
-        tag, p = prev
-        deltas = {
-            name: round(t - p["queries"][name], 3)
-            for name, t in timings.items()
-            if name in p["queries"]
-        }
-        doc["prev_round"] = tag
-        doc["prev_total_sec"] = p.get("value")
-        doc["delta_queries_sec"] = deltas
-        for name, d in sorted(deltas.items(), key=lambda kv: kv[1]):
-            print(f"# delta vs {tag} {name}: {d:+.3f}s", file=sys.stderr)
-    # Two-line output (r13, the r12 verdict's task #2): the one-line
-    # JSON grew past the driver's output-tail capture in r09-r11
-    # (BENCH_r{09,10,11}.json: parsed=null — the head of the line was
-    # truncated away and round-over-round comparison silently died for
-    # three rounds). The FULL document (extended per-query map, noise
-    # suspects, canary rechecks, deltas) goes out first on its own
-    # stdout line for the record; the FINAL line — the one the driver
-    # parses — is the compact contract doc (headline total + 15-query
-    # map + sf/cpus/canary, ~0.6 KB) plus any regressions/errors,
-    # which must never be silently dropped. Nothing is removed from
-    # `queries`; the extended map simply moves to the earlier line.
+    # Two-line output: a one-line JSON carrying the extended map grew
+    # past an output-tail capture and was truncated away. The FULL
+    # document goes out first on its own stdout line for the record;
+    # the FINAL line — the one a reader of the run parses — is the
+    # compact contract doc (headline total + 15-query map + sf/cpus/
+    # canary, ~0.6 KB) plus any errors, which must never be silently
+    # dropped.
     print(json.dumps(doc))
     compact = {
         k: doc[k]
@@ -704,8 +286,6 @@ def main() -> None:
     }
     compact["extended_total_sec"] = round(sum(extended.values()), 3)
     compact["n_extended"] = len(extended)
-    if regressions:
-        compact["regressions"] = regressions
     if errors:
         compact["errors"] = errors
     print(json.dumps(compact))

@@ -8,6 +8,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iceberg_tracking_spark.session import get_spark  # noqa: E402
+from perfbench.probe import RETAIN_CONF  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -28,9 +29,18 @@ def pytest_collection_modifyitems(config, items):
     items[:] = front + rest
 
 
+def make_session():
+    """The suite's session; `tests/test_work_counters.py` also builds its
+    baseline with it, so the baseline and the test count the same plans.
+    The status store keeps every job and stage (`RETAIN_CONF`): the work
+    counters read the stages of each query's jobs, and a stage evicted
+    under Spark's default 1000-stage cap cannot be read back."""
+    return get_spark(app_name="tests", shuffle_partitions=8, extra_conf=RETAIN_CONF)
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", shuffle_partitions=8)
+    s = make_session()
     yield s
 
 

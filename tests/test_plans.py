@@ -11,10 +11,12 @@ stops being an equi-join) fails CI, not the next 100 TB run.
 from __future__ import annotations
 
 import io
+import json
 from contextlib import redirect_stdout
 
 import pytest
 
+import bench
 from iceberg_tracking_spark.plans import QUERIES
 
 # All-pairs-by-construction queries: the oracle-checkable theta joins
@@ -456,22 +458,33 @@ def test_skew_join_salts_the_shuffle(spark, sf_dir):
 def test_bench_headline_queries_registered():
     """Every bench.py headline name must resolve in the registry — a
     rename here would crash the round's performance record."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location("bench", "bench.py")
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
     missing = [n for n in bench.HEADLINE if n not in QUERIES]
     assert not missing, f"bench HEADLINE references unknown queries: {missing}"
     missing_ext = [n for n in bench.EXTENDED if n not in QUERIES]
     assert not missing_ext, f"bench EXTENDED references unknown queries: {missing_ext}"
-    # Every benched query carries a regression floor (r6 verdict: the
-    # headline set lacked the extended set's mechanical >2x flag, so
-    # q_grid_join's two-round drift needed manual delta-reading).
-    unfloored = [n for n in bench.HEADLINE if n not in bench.HEADLINE_FLOOR_SEC]
-    assert not unfloored, f"HEADLINE queries without a floor: {unfloored}"
-    unfloored_ext = [n for n in bench.EXTENDED if n not in bench.EXTENDED_FLOOR_SEC]
-    assert not unfloored_ext, f"EXTENDED queries without a floor: {unfloored_ext}"
+
+
+def test_bench_output_contract(spark, sf_dir, monkeypatch, capsys):
+    """bench.py's last stdout line is the compact contract JSON that
+    readers of a run parse: a fixed key set, small enough that an
+    output-tail capture never truncates it. The line before it is the full document
+    with the extended map."""
+    monkeypatch.setattr(bench, "HEADLINE", ["q_sum_count"])
+    monkeypatch.setattr(bench, "EXTENDED", ["q_lag_features"])
+    # the suite's session, so bench's session conf cannot leak into it
+    monkeypatch.setattr(bench, "get_spark", lambda **_: spark)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    bench.main()
+    *_, full, last = capsys.readouterr().out.strip().splitlines()
+    assert len(last.encode()) <= 1536, len(last.encode())
+    compact = json.loads(last)
+    assert set(compact) == {
+        "metric", "value", "unit", "queries", "sf", "cpus",
+        "runs_per_query", "canary_sec", "canary_floor_sec", "host_factor",
+        "extended_total_sec", "n_extended",
+    }, compact
+    assert set(compact["queries"]) == {"q_sum_count"}
+    assert set(json.loads(full)["extended"]) == {"q_lag_features"}
 
 
 def test_scatter_flag_disables_repartition(spark):

@@ -1,16 +1,20 @@
 #!/usr/bin/env python
-"""Optimization probe: capture `.explain("formatted")` and min-of-3
-timings for named queries (bench methodology: full `.count()` action per
-run, fresh Catalyst plan each run; noop-sink timing to separate compute
-from the count action, guide §1.4).
+"""Optimization probe: capture `.explain("formatted")`, the work
+counters of `tests/test_work_counters.py` and min-of-3 timings for
+named queries (bench methodology: full `.count()` action per run, fresh
+Catalyst plan each run; noop-sink timing to separate compute from the
+count action, guide §1.4).
 
 Usage:
     python tools_probe.py ROUND TAG q_name [q_name ...]
 
 Writes plans/<ROUND>/<q>_<TAG>.txt (ROUND is the plan-dump directory,
-e.g. `r13`) and prints one timing line per query. TAG is `before` /
-`after` or any scratch label. SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS are
-honored as in bench.py.
+e.g. `r13`) and prints one line per query: jobs, stages, input rows,
+file scans and exchanges, then the timings. Unlike the timings, the
+counters do not move with host load, so a before/after pair of probe
+runs shows a plan change as a counter delta. TAG is `before` / `after`
+or any scratch label. SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS are honored
+as in bench.py.
 """
 
 from __future__ import annotations
@@ -25,6 +29,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from iceberg_tracking_spark.plans import QUERIES  # noqa: E402
 from iceberg_tracking_spark.session import get_spark  # noqa: E402
+from perfbench.probe import RETAIN_CONF, SparkProbe  # noqa: E402
+from tests.test_work_counters import work_counters  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = 3
@@ -36,7 +42,7 @@ def main() -> None:
     round_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     outdir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", round_dir)
     os.makedirs(outdir, exist_ok=True)
-    spark = get_spark(app_name=f"{round_dir}_probe")
+    spark = get_spark(app_name=f"{round_dir}_probe", extra_conf=RETAIN_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     # same warm-up as bench.py
     spark.range(1000).count()
@@ -44,10 +50,7 @@ def main() -> None:
 
     load_table(spark, SF_DIR, "lineitem").limit(1000).count()
     load_table(spark, SF_DIR, "events").limit(1000).count()
-    from bench import CANARY_FLOOR_SEC, _canary_sec
-
-    canary = _canary_sec(spark)
-    print(f"# canary {canary:.3f}s (floor {CANARY_FLOOR_SEC}s)")
+    probe = SparkProbe(spark)
     for name in names:
         fn = QUERIES[name].fn
         buf = io.StringIO()
@@ -55,6 +58,7 @@ def main() -> None:
             fn(spark, SF_DIR).explain("formatted")
         with open(os.path.join(outdir, f"{name}_{tag}.txt"), "w") as f:
             f.write(buf.getvalue())
+        counters = work_counters(probe, spark, SF_DIR, name)
         best_cnt = float("inf")
         for _ in range(RUNS):
             t0 = time.perf_counter()
@@ -66,11 +70,10 @@ def main() -> None:
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             best_noop = min(best_noop, time.perf_counter() - t0)
         print(
-            f"{name}: count={best_cnt:.3f}s noop={best_noop:.3f}s "
-            f"(min of {RUNS})"
+            f"{name}: "
+            + " ".join(f"{k}={v}" for k, v in counters.items())
+            + f" count={best_cnt:.3f}s noop={best_noop:.3f}s (min of {RUNS})"
         )
-    c2 = _canary_sec(spark)
-    print(f"# closing canary {c2:.3f}s")
 
 
 if __name__ == "__main__":
