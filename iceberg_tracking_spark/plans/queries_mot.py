@@ -11,7 +11,7 @@ driver-checkable data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.geometry import iou
@@ -58,6 +58,49 @@ def _boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
         (20.0 + (e % 30)).alias("dw"),
         (20.0 + (e % 20) + (e % 5) - 2.0).alias("dh"),
     )
+
+
+def _eval_gt_tr(
+    spark: SparkSession, sf_dir: str, sequence: Column
+) -> tuple[DataFrame, DataFrame]:
+    """The eval queries' (gt, tracks) fixture over `_boxes`: GT = one
+    box per (user, frame-hour); tracks = jittered boxes with simulated
+    misses (event_id % 10 = 0) and id switches (frame % 50 < 2); both
+    sides carry `sequence` as their sequence column.
+
+    `picked` is checkpointed: gt, tr and the metric jobs' branches
+    consume it several times, and without materialization Catalyst
+    re-derives the scan+window subtree per branch (measured on
+    q_eval_metrics: 10 parquet scans, zero ReusedExchange; on
+    q_eval_identity's two join sides: ~+0.9s at sf0.1). localCheckpoint
+    runs it once — the same "materialize the small derived relation,
+    not the big input" pattern as q_track / operators/graph.py.
+    """
+    b = _boxes(spark, sf_dir)
+    w = Window.partitionBy("user_id", "frame").orderBy("event_id")
+    picked = (
+        b.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .localCheckpoint()
+    )
+    gt = picked.select(
+        sequence.alias("sequence"),
+        "frame",
+        F.col("user_id").alias("gt_id"),
+        F.col("gl").alias("l"), F.col("gt_").alias("t"),
+        F.col("gw").alias("w"), F.col("gh").alias("h"),
+    )
+    tr = picked.filter(F.col("event_id") % 10 != 0).select(
+        sequence.alias("sequence"),
+        "frame",
+        (
+            F.col("user_id")
+            + F.when(F.col("frame") % 50 < 2, 100).otherwise(0)
+        ).alias("track_id"),
+        F.col("dl").alias("l"), F.col("dt_").alias("t"),
+        F.col("dw").alias("w"), F.col("dh").alias("h"),
+    )
+    return gt, tr
 
 
 @query(
@@ -404,36 +447,7 @@ def q_eval_metrics(spark, sf_dir):
     and id switches (frame % 50 < 2)."""
     from .eval_metrics import clear_identity_metrics
 
-    b = _boxes(spark, sf_dir)
-    w = Window.partitionBy("user_id", "frame").orderBy("event_id")
-    # gt + tr + the metric job's own count/coverage branches consume
-    # `picked` five times; without materialization Catalyst re-derives
-    # the scan+window subtree per branch (measured: 10 parquet scans,
-    # zero ReusedExchange). localCheckpoint runs it once — the same
-    # "materialize the small derived relation, not the big input"
-    # pattern as q_track / operators/graph.py.
-    picked = (
-        b.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .localCheckpoint()
-    )
-    gt = picked.select(
-        F.lit("s0").alias("sequence"),
-        "frame",
-        F.col("user_id").alias("gt_id"),
-        F.col("gl").alias("l"), F.col("gt_").alias("t"),
-        F.col("gw").alias("w"), F.col("gh").alias("h"),
-    )
-    tr = picked.filter(F.col("event_id") % 10 != 0).select(
-        F.lit("s0").alias("sequence"),
-        "frame",
-        (
-            F.col("user_id")
-            + F.when(F.col("frame") % 50 < 2, 100).otherwise(0)
-        ).alias("track_id"),
-        F.col("dl").alias("l"), F.col("dt_").alias("t"),
-        F.col("dw").alias("w"), F.col("dh").alias("h"),
-    )
+    gt, tr = _eval_gt_tr(spark, sf_dir, F.lit("s0"))
     # Tightest lossless cells (r12): widths ≤ 49, heights ≤ 39/41 by
     # derivation, so overlap ⇒ |Δcx| < 49, |Δcy| < 40 (see the
     # q_iou_argmax note; clear_identity_metrics docstring has the
@@ -850,34 +864,7 @@ def q_eval_identity(spark, sf_dir):
     (sequence, track_id) — shuffle-bounded by id cardinality."""
     from .eval_metrics import identity_metrics, matched_pairs
 
-    b = _boxes(spark, sf_dir)
-    w = Window.partitionBy("user_id", "frame").orderBy("event_id")
-    # `picked` checkpoints even though its only consumers are the two
-    # sides of one matching join: measured at sf0.1, re-deriving the
-    # scan+window per join side costs ~+0.9s vs the materialization
-    # (same finding as q_eval_metrics's 5-consumer case, smaller N)
-    picked = (
-        b.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .localCheckpoint()
-    )
-    gt = picked.select(
-        F.lit("s0").alias("sequence"),
-        "frame",
-        F.col("user_id").alias("gt_id"),
-        F.col("gl").alias("l"), F.col("gt_").alias("t"),
-        F.col("gw").alias("w"), F.col("gh").alias("h"),
-    )
-    tr = picked.filter(F.col("event_id") % 10 != 0).select(
-        F.lit("s0").alias("sequence"),
-        "frame",
-        (
-            F.col("user_id")
-            + F.when(F.col("frame") % 50 < 2, 100).otherwise(0)
-        ).alias("track_id"),
-        F.col("dl").alias("l"), F.col("dt_").alias("t"),
-        F.col("dw").alias("w"), F.col("dh").alias("h"),
-    )
+    gt, tr = _eval_gt_tr(spark, sf_dir, F.lit("s0"))
     # three consumers (CLR_TP count, GT-side runs, track-side runs)
     # re-derive the pair join otherwise — materialize it once, same
     # rationale as q_eval_metrics's `picked` checkpoint
@@ -1008,31 +995,8 @@ def q_eval_combined(spark, sf_dir):
         matched_pairs,
     )
 
-    b = _boxes(spark, sf_dir)
-    w = Window.partitionBy("user_id", "frame").orderBy("event_id")
-    picked = (
-        b.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .localCheckpoint()
-    )
     seq = F.when(F.col("user_id") % 2 == 0, F.lit("s0")).otherwise(F.lit("s1"))
-    gt = picked.select(
-        seq.alias("sequence"),
-        "frame",
-        F.col("user_id").alias("gt_id"),
-        F.col("gl").alias("l"), F.col("gt_").alias("t"),
-        F.col("gw").alias("w"), F.col("gh").alias("h"),
-    )
-    tr = picked.filter(F.col("event_id") % 10 != 0).select(
-        seq.alias("sequence"),
-        "frame",
-        (
-            F.col("user_id")
-            + F.when(F.col("frame") % 50 < 2, 100).otherwise(0)
-        ).alias("track_id"),
-        F.col("dl").alias("l"), F.col("dt_").alias("t"),
-        F.col("dw").alias("w"), F.col("dh").alias("h"),
-    )
+    gt, tr = _eval_gt_tr(spark, sf_dir, seq)
     matches = matched_pairs(
         gt, tr, iou_threshold=0.5, prefilter_cell=(49.0, 40.0)
     ).localCheckpoint()  # widths <= 49, heights <= 41 -> (49,40) grid

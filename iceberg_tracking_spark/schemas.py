@@ -61,20 +61,6 @@ EMBEDDINGS_SCHEMA = T.StructType(
     ]
 )
 
-# Tracker output (same MOT write-out shape as reference tracking.py:1164-1174).
-TRACKS_SCHEMA = T.StructType(
-    [
-        T.StructField("sequence", T.StringType(), False),
-        T.StructField("frame", T.StringType(), False),
-        T.StructField("track_id", T.IntegerType(), False),
-        T.StructField("bb_left", T.DoubleType(), False),
-        T.StructField("bb_top", T.DoubleType(), False),
-        T.StructField("bb_width", T.DoubleType(), False),
-        T.StructField("bb_height", T.DoubleType(), False),
-        T.StructField("conf", T.DoubleType(), False),
-    ]
-)
-
 # Multimodal blob column convention (LLM-pipeline surface): opaque bytes
 # plus typed metadata; decode happens in mapInPandas UDFs.
 MEDIA_SCHEMA = T.StructType(

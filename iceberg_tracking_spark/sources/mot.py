@@ -30,13 +30,11 @@ def read_mot_csv(
     spark: SparkSession,
     path: str,
     sequence: str | None = None,
-    drop_malformed: bool = True,
 ) -> DataFrame:
     """Read a MOT det/gt/track CSV into the canonical detections shape.
 
     Malformed rows land in `_corrupt_record` (PERMISSIVE mode) and are
-    dropped by default — the reference logs-and-skips them
-    (helpers.py:387-394).
+    dropped — the reference logs-and-skips them (helpers.py:387-394).
     """
     df = (
         spark.read.schema(MOT_CSV_SCHEMA)
@@ -44,19 +42,18 @@ def read_mot_csv(
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
     )
-    if drop_malformed:
-        df = df.filter(
-            F.col("_corrupt_record").isNull()
-            & F.col("obj_id").isNotNull()
-            & F.col("bb_width").isNotNull()
-        )
+    df = df.filter(
+        F.col("_corrupt_record").isNull()
+        & F.col("obj_id").isNotNull()
+        & F.col("bb_width").isNotNull()
+    )
     df = df.drop("_corrupt_record").withColumn("frame", normalize_frame(F.col("frame")))
     if sequence is not None:
         df = df.withColumn("sequence", F.lit(sequence))
     return df
 
 
-def write_mot_csv(df: DataFrame, path: str, sort: bool = True) -> None:
+def write_mot_csv(df: DataFrame, path: str) -> None:
     """Write detections/tracks in MOT format `frame,id,l,t,w,h,conf,1,-1,-1`.
 
     The reference re-sorts the output file by (id, frame) — note: id
@@ -89,9 +86,7 @@ def write_mot_csv(df: DataFrame, path: str, sort: bool = True) -> None:
         F.coalesce(F.col("mot_z"), F.lit(-1)).alias("mot_z")
         if "mot_z" in df.columns
         else F.lit(-1).alias("mot_z"),
-    )
-    if sort:
-        out = out.orderBy(F.col("obj_id"), F.col("frame"))
+    ).orderBy(F.col("obj_id"), F.col("frame"))
     out.write.mode("overwrite").csv(path)
 
 

@@ -15,8 +15,6 @@ from pyspark.sql import functions as F
 
 from ..schemas import SYNTHETIC_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table as a DataFrame.
@@ -81,11 +79,7 @@ def scatter(df: DataFrame, spark: SparkSession | None = None) -> DataFrame:
     On a real cluster the scan is already parallel (many files /
     row-groups) and this round-robin shuffle is a cheap no-op-sized
     exchange — the pattern mirrors what AQE does for small inputs.
-    Set SPARK_GRAFT_SCATTER=0 to disable it there (multi-file scans
-    don't need the spread, so the exchange is pure overhead).
     """
-    if os.environ.get("SPARK_GRAFT_SCATTER", "1") == "0":
-        return df
     sc = (spark or df.sparkSession).sparkContext
     return df.repartition(sc.defaultParallelism)
 

@@ -1,2 +1,1 @@
-from .kalman import KalmanBoxTracker  # noqa: F401
 from .batch import track_sequences  # noqa: F401

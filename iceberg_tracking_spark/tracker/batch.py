@@ -6,8 +6,8 @@ predict → spatial-index candidates → match → update → age/delete →
 create → emit. Sequences are independent, so the distributed form is
 `detections.groupBy("sequence").applyInPandas(track_one_sequence)`:
 parallel across sequences, faithful sequential semantics within one.
-The streaming form (transformWithStateInPandas) lives in
-streaming/tracker.py and shares this per-frame step.
+The streaming form (`applyInPandasWithState`) lives in
+streaming/tracker.py and runs the same `run_frames` loop.
 
 Determinism: frames processed in sorted order; candidate pairs scored
 and greedily matched in (score desc, track_id asc, det_id asc,
@@ -17,19 +17,19 @@ reference's stable-sort ties (SURVEY §7.4 note 1).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .kalman import F_MAT, H_MAT, Q_MAT, R_MAT, KalmanBoxTracker
+from .kalman import F_MAT, H_MAT, P0_MAT, Q_MAT, R_MAT, STATE_DIM
 
-# Transposes used by the stacked (per-frame batched) Kalman math in
-# `SequenceTracker.step`. Stacked `X @ F_MAT.T` / `np.matmul(F_MAT, P)`
-# produce bit-identical float64 results to the per-track `F @ x` /
-# `F @ P` they replace (same LAPACK/ufunc kernels per 2-d slice;
-# verified element-exact in tests/test_tracker.py's parity harness).
+# Transposes used by the stacked Kalman math in `SequenceTracker.step`.
+# Stacked `X @ F_MAT.T` / `np.matmul(F_MAT, P)` produce bit-identical
+# float64 results to the per-track `F @ x` / `F @ P` they replaced
+# (same LAPACK/ufunc kernels per 2-d slice; verified element-exact in
+# tests/test_tracker_parity.py).
 _F_T = F_MAT.T.copy()
 _H_T = H_MAT.T.copy()
 
@@ -37,6 +37,11 @@ TRACKS_OUT_SCHEMA = (
     "sequence string, frame string, track_id int, det_id int, "
     "bb_left double, bb_top double, bb_width double, bb_height double, conf double"
 )
+# Emitted row layout after `frame`, with the output dtypes.
+_OUT_DTYPES = {
+    "track_id": "int32", "det_id": "int32", "bb_left": "float64", "bb_top": "float64",
+    "bb_width": "float64", "bb_height": "float64", "conf": "float64",
+}
 
 
 @dataclass
@@ -51,96 +56,80 @@ class TrackerConfig:
     min_hits: int = 1                    # frames before a track is emitted
     min_track_length: int = 2            # post-filter: drop shorter tracks
     min_box_area: float = 100.0          # size gate at track creation
-    cell_size: float = 100.0             # spatial grid cell
     radius_tolerance: float = 0.2        # search radius = max(2σ, dist_thr*(1+tol))
     w_distance: float = 0.5
     w_size: float = 0.5
-    emit_unmatched_predictions: bool = False
-
-
-@dataclass
-class _Track:
-    track_id: int
-    kf: KalmanBoxTracker
-    time_since_update: int = 0
-    hits: int = 0
-    history: list = field(default_factory=list)
 
 
 class SequenceTracker:
     """Sequential per-sequence tracking loop — the applyInPandas payload.
 
     Pure Python/numpy: no Spark imports, so it is unit-testable without
-    a session and reusable by the streaming wrapper.
+    a session and reusable by the streaming wrapper. State is stacked,
+    one row per live track in creation order: `ids`, `tsu` (frames since
+    the last update) and `hits` (int arrays), Kalman means `X (n,6)` and
+    covariances `P (n,6,6)`.
     """
 
     def __init__(self, config: TrackerConfig | None = None) -> None:
         self.cfg = config or TrackerConfig()
-        self.tracks: list[_Track] = []
         self.next_id = 1
+        self.ids = np.zeros(0, dtype=np.int64)
+        self.tsu = np.zeros(0, dtype=np.int64)
+        self.hits = np.zeros(0, dtype=np.int64)
+        self.X = np.zeros((0, STATE_DIM))
+        self.P = np.zeros((0, STATE_DIM, STATE_DIM))
 
     # -- per-frame step (reference _track_frame, tracking.py:764-854) --
     def step(self, frame: str, dets: np.ndarray, det_ids: np.ndarray, confs: np.ndarray):
         """Process one frame. dets: (n,4) [l,t,w,h]. Returns emitted rows.
 
-        Vectorized across tracks×detections (r13, guide §4.2): the
-        per-pair grid walk with scalar numpy ops and the per-track
-        6×6 Kalman calls dominated the applyInPandas payload (np.
-        linalg.inv alone was ~1/3 of the loop). All math below is the
-        SAME float64 expression evaluated elementwise on stacked
-        arrays, so every score, state and covariance is bit-identical
-        to the former per-pair/per-track code (parity-tested against a
-        frozen copy of that code in tests/test_tracker.py). The grid
-        prune was radius-lossless (reach = ceil(radius/cell) cells
-        covers every det within `radius`), so the dense mask below
-        keeps exactly the same candidate set.
+        Vectorized across tracks×detections (r13, guide §4.2): every
+        score, state and covariance is the SAME float64 expression the
+        former per-pair/per-track code evaluated, applied elementwise
+        on stacked arrays, so results are bit-identical to it
+        (parity-tested against a frozen copy of that code in
+        tests/test_tracker_parity.py). The former grid prune was
+        radius-lossless (reach = ceil(radius/cell) cells covers every
+        det within `radius`), so the dense mask below keeps exactly the
+        same candidate set.
         """
         cfg = self.cfg
-        n_t, n_d = len(self.tracks), len(dets)
-        # 1. predict all tracks — stacked F@x / F@P@F'+Q (Q, R: the
-        #    module constants every filter uses)
-        if n_t:
-            X = np.stack([tr.kf.x for tr in self.tracks])
-            P = np.stack([tr.kf.P for tr in self.tracks])
-            X = X @ _F_T
-            P = np.matmul(np.matmul(F_MAT, P), _F_T) + Q_MAT
+        # 1. predict all tracks — stacked F@x / F@P@F'+Q
+        X = self.X @ _F_T
+        P = np.matmul(np.matmul(F_MAT, self.P), _F_T) + Q_MAT
         # 2. candidate pairs: dense tracks×dets score matrix + the
         #    radius/size/score gates (same gate expressions, same
         #    IEEE evaluation order per element as the scalar loop)
-        pairs: list[tuple[float, int, int]] = []
-        if n_t and n_d:
-            cx = dets[:, 0] + dets[:, 2] / 2.0
-            cy = dets[:, 1] + dets[:, 3] / 2.0
-            tx, ty = X[:, 0], X[:, 1]
-            tw, th = X[:, 4], X[:, 5]
-            radius = np.maximum(
-                2.0 * np.sqrt(P[:, 0, 0] + P[:, 1, 1]),
-                cfg.distance_threshold * (1.0 + cfg.radius_tolerance),
-            )
-            dist = np.hypot(cx[None, :] - tx[:, None], cy[None, :] - ty[:, None])
-            area_t = (tw * th)[:, None]
-            area_d = (dets[:, 2] * dets[:, 3])[None, :]
-            amax = np.maximum(area_t, area_d)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                size_sim = np.where(
-                    amax > 0, np.minimum(area_t, area_d) / amax, 0.0
-                )
-            dist_sim = 1.0 - np.minimum(dist / cfg.distance_threshold, 1.0)
-            score = cfg.w_distance * dist_sim + cfg.w_size * size_sim
-            ok = (
-                (dist <= radius[:, None])
-                & (size_sim >= cfg.size_threshold)
-                & (score >= cfg.score_threshold)
-            )
-            ti, dj = np.nonzero(ok)
-            pairs = list(zip(score[ti, dj].tolist(), ti.tolist(), dj.tolist()))
+        cx = dets[:, 0] + dets[:, 2] / 2.0
+        cy = dets[:, 1] + dets[:, 3] / 2.0
+        tx, ty = X[:, 0], X[:, 1]
+        tw, th = X[:, 4], X[:, 5]
+        radius = np.maximum(
+            2.0 * np.sqrt(P[:, 0, 0] + P[:, 1, 1]),
+            cfg.distance_threshold * (1.0 + cfg.radius_tolerance),
+        )
+        dist = np.hypot(cx[None, :] - tx[:, None], cy[None, :] - ty[:, None])
+        area_t = (tw * th)[:, None]
+        area_d = (dets[:, 2] * dets[:, 3])[None, :]
+        amax = np.maximum(area_t, area_d)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            size_sim = np.where(amax > 0, np.minimum(area_t, area_d) / amax, 0.0)
+        dist_sim = 1.0 - np.minimum(dist / cfg.distance_threshold, 1.0)
+        score = cfg.w_distance * dist_sim + cfg.w_size * size_sim
+        ok = (
+            (dist <= radius[:, None])
+            & (size_sim >= cfg.size_threshold)
+            & (score >= cfg.score_threshold)
+        )
+        ti, dj = np.nonzero(ok)
+        pairs = list(zip(score[ti, dj].tolist(), ti.tolist(), dj.tolist()))
         # 3. greedy 1:1 assignment, pinned total order: score desc,
         #    track_id, det_id, then the detection index — det_ids are
         #    obj_id values and may repeat within a frame, so the index
         #    breaks exact ties and the pre-sort pair order is immaterial
-        pairs.sort(
-            key=lambda p: (-p[0], self.tracks[p[1]].track_id, det_ids[p[2]], p[2])
-        )
+        ids = self.ids.tolist()
+        pairs.sort(key=lambda p: (-p[0], ids[p[1]], det_ids[p[2]], p[2]))
         used_t: set[int] = set()
         used_d: set[int] = set()
         matches: list[tuple[int, int]] = []
@@ -152,11 +141,11 @@ class SequenceTracker:
             matches.append((i, j))
         # 4. update matched — one stacked Kalman update over all
         #    matched tracks (matches are disjoint, so batching cannot
-        #    interact; expression order mirrors KalmanBoxTracker.update)
-        emitted = []
+        #    interact; expression order is the standard
+        #    K=PH'(HPH'+R)^-1, x+=K(z-Hx), P=(I-KH)P)
+        mi = np.array([i for i, _ in matches], dtype=np.intp)
+        mj = np.array([j for _, j in matches], dtype=np.intp)
         if matches:
-            mi = np.array([i for i, _ in matches])
-            mj = np.array([j for _, j in matches])
             db = dets[mj]
             Z = np.stack(
                 [db[:, 0] + db[:, 2] / 2.0, db[:, 1] + db[:, 3] / 2.0,
@@ -168,46 +157,43 @@ class SequenceTracker:
             S = np.matmul(np.matmul(H_MAT, Pm), _H_T) + R_MAT
             K = np.matmul(np.matmul(Pm, _H_T), np.linalg.inv(S))
             X[mi] = Xm + np.matmul(K, Y[..., None])[..., 0]
-            P[mi] = np.matmul(np.eye(6) - np.matmul(K, H_MAT), Pm)
-        if n_t:
-            for idx, tr in enumerate(self.tracks):
-                tr.kf.x = X[idx]
-                tr.kf.P = P[idx]
-        for i, j in matches:
-            tr = self.tracks[i]
-            l, t, w, h = dets[j]
-            tr.time_since_update = 0
-            tr.hits += 1
-            if tr.hits >= self.cfg.min_hits:
-                emitted.append(
-                    (frame, tr.track_id, int(det_ids[j]), l, t, w, h, float(confs[j]))
-                )
-            tr.history.append(frame)
-        # 5. age + delete (reference tracking.py:815-823)
-        matched_idx = {i for i, _ in matches}
-        for i, tr in enumerate(self.tracks):
-            if i not in matched_idx:
-                tr.time_since_update += 1
-        self.tracks = [
-            tr for tr in self.tracks if tr.time_since_update <= self.cfg.max_age
+            P[mi] = np.matmul(np.eye(STATE_DIM) - np.matmul(K, H_MAT), Pm)
+        # 5. age + delete (reference tracking.py:815-823): matched
+        #    tracks reset, the rest age; survivors keep creation order
+        tsu = self.tsu + 1
+        tsu[mi] = 0
+        hits = self.hits.copy()
+        hits[mi] += 1
+        shown = (hits >= cfg.min_hits).tolist()
+        emitted = [
+            (frame, ids[i], int(det_ids[j]), *dets[j], float(confs[j]))
+            for i, j in matches
+            if shown[i]
         ]
+        keep = tsu <= cfg.max_age
         # 6. create new tracks from unmatched dets (size gate,
-        #    reference tracking.py:825-839; monotone id counter)
-        for j in range(len(dets)):
-            if j in used_d:
-                continue
-            l, t, w, h = dets[j]
-            if w * h < self.cfg.min_box_area:
-                continue
-            kf = KalmanBoxTracker(l + w / 2.0, t + h / 2.0, w, h)
-            tr = _Track(track_id=self.next_id, kf=kf, hits=1)
-            self.next_id += 1
-            tr.history.append(frame)
-            self.tracks.append(tr)
-            if self.cfg.min_hits <= 1:
-                emitted.append(
-                    (frame, tr.track_id, int(det_ids[j]), l, t, w, h, float(confs[j]))
-                )
+        #    reference tracking.py:825-839; monotone id counter). The
+        #    gate skips a det only when `w*h < min_box_area` holds, so a
+        #    NaN box still opens a track.
+        new = np.ones(len(dets), dtype=bool)
+        new[mj] = False
+        new &= ~(dets[:, 2] * dets[:, 3] < cfg.min_box_area)
+        nj = np.flatnonzero(new)
+        new_ids = np.arange(self.next_id, self.next_id + len(nj), dtype=np.int64)
+        self.next_id += len(nj)
+        nb, zero = dets[nj], np.zeros(len(nj))
+        x0 = np.column_stack([nb[:, 0] + nb[:, 2] / 2.0, nb[:, 1] + nb[:, 3] / 2.0,
+                              zero, zero, nb[:, 2], nb[:, 3]])
+        self.ids = np.concatenate([self.ids[keep], new_ids])
+        self.tsu = np.concatenate([tsu[keep], np.zeros(len(nj), dtype=np.int64)])
+        self.hits = np.concatenate([hits[keep], np.ones(len(nj), dtype=np.int64)])
+        self.X = np.concatenate([X[keep], x0])
+        self.P = np.concatenate([P[keep], np.broadcast_to(P0_MAT, (len(nj), STATE_DIM, STATE_DIM))])
+        if cfg.min_hits <= 1:
+            emitted.extend(
+                (frame, tid, int(det_ids[j]), *dets[j], float(confs[j]))
+                for tid, j in zip(new_ids.tolist(), nj.tolist())
+            )
         return emitted
 
 
@@ -230,21 +216,18 @@ def frame_order(frames) -> list:
     return sorted(set(frames), key=k)
 
 
-def track_one_sequence_pdf(pdf: pd.DataFrame, cfg: TrackerConfig) -> pd.DataFrame:
-    """Run the sequential tracker over one sequence's detections.
+def run_frames(tracker: SequenceTracker, pdf: pd.DataFrame) -> pd.DataFrame:
+    """Step `tracker` over one sequence's detections, frame by frame in
+    `frame_order`; returns the emitted rows with a `sequence` column.
 
-    Columns are extracted to numpy ONCE and frames sliced by
-    positional index (r13): the former per-frame boolean mask
-    (`pdf[pdf["frame"] == frame]`) re-scanned every row of the group
-    per frame — O(frames × rows) pandas work that dominated long
-    sequences. `groupby(...).indices` yields each frame's positions in
-    original row order (same rows, same order as the mask), and
-    `np.argsort(kind="quicksort")` is the same algorithm
-    `sort_values("obj_id")` applies, so the per-frame det arrays are
-    element-identical to the old path (parity-tested).
+    Columns are extracted to numpy once and each frame's rows taken by
+    position (`groupby(...).indices`, original row order), so a frame
+    costs O(its rows); a per-frame boolean mask would rescan the whole
+    sequence per frame. Within a frame, dets are ordered by obj_id with
+    `np.argsort(kind="quicksort")`, the algorithm `sort_values("obj_id")`
+    applies, so duplicate obj_ids keep the order of the frozen reference
+    in tests/test_tracker_parity.py.
     """
-    seq = pdf["sequence"].iloc[0]
-    tracker = SequenceTracker(cfg)
     out_rows = []
     idx_by_frame = pdf.groupby("frame", sort=False).indices
     obj_all = pdf["obj_id"].to_numpy()
@@ -253,32 +236,21 @@ def track_one_sequence_pdf(pdf: pd.DataFrame, cfg: TrackerConfig) -> pd.DataFram
     for frame in frame_order(pdf["frame"]):
         idx = idx_by_frame[frame]
         sel = idx[np.argsort(obj_all[idx], kind="quicksort")]
-        emitted = tracker.step(frame, box_all[sel], obj_all[sel], conf_all[sel])
-        out_rows.extend(emitted)
-    out = pd.DataFrame(
-        out_rows,
-        columns=[
-            "frame", "track_id", "det_id",
-            "bb_left", "bb_top", "bb_width", "bb_height", "conf",
-        ],
-    )
-    out.insert(0, "sequence", seq)
+        out_rows.extend(tracker.step(frame, box_all[sel], obj_all[sel], conf_all[sel]))
+    out = pd.DataFrame(out_rows, columns=["frame", *_OUT_DTYPES])
+    out.insert(0, "sequence", pdf["sequence"].iloc[0])
+    return out
+
+
+def track_one_sequence_pdf(pdf: pd.DataFrame, cfg: TrackerConfig) -> pd.DataFrame:
+    """Run the sequential tracker over one sequence's detections."""
+    out = run_frames(SequenceTracker(cfg), pdf)
     # post-filter: drop tracks shorter than min_track_length
     # (reference tracking.py:1152-1174)
     if len(out) and cfg.min_track_length > 1:
         counts = out.groupby("track_id")["frame"].transform("count")
         out = out[counts >= cfg.min_track_length]
-    return out.astype(
-        {
-            "track_id": "int32",
-            "det_id": "int32",
-            "bb_left": "float64",
-            "bb_top": "float64",
-            "bb_width": "float64",
-            "bb_height": "float64",
-            "conf": "float64",
-        }
-    )
+    return out.astype(_OUT_DTYPES)
 
 
 def track_sequences(

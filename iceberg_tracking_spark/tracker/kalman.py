@@ -1,12 +1,13 @@
-"""Constant-velocity Kalman filter for box tracking.
+"""Constant-velocity Kalman model for box tracking.
 
-Re-implements the reference's 6-state filter semantics from its
-published behavior (reference tracking.py:234-369): state
+The reference's 6-state filter (reference tracking.py:234-369): state
 ``[cx, cy, vx, vy, w, h]``, predict advances position by velocity,
 update corrects position/size from a measurement ``[cx, cy, w, h]``.
-Written fresh in numpy against the standard Kalman equations
-(predict: x=Fx, P=FPF'+Q; update: K=PH'(HPH'+R)^-1, x+=K(z-Hx),
-P=(I-KH)P).
+This module holds the model constants only; `SequenceTracker.step`
+(tracker/batch.py) applies the standard Kalman equations (predict:
+x=Fx, P=FPF'+Q; update: K=PH'(HPH'+R)^-1, x+=K(z-Hx), P=(I-KH)P) to
+every live track at once. A new track starts at x=[cx, cy, 0, 0, w, h],
+P=P0.
 """
 
 from __future__ import annotations
@@ -36,28 +37,3 @@ P0_MAT = np.eye(STATE_DIM)
 P0_MAT[2, 2] = 10.0
 P0_MAT[3, 3] = 10.0
 
-
-class KalmanBoxTracker:
-    """Per-object constant-velocity filter (reference tracking.py:234-369)."""
-
-    def __init__(self, cx: float, cy: float, w: float, h: float) -> None:
-        self.x = np.array([cx, cy, 0.0, 0.0, w, h], dtype=np.float64)
-        self.P = P0_MAT.copy()
-
-    def predict(self) -> np.ndarray:
-        self.x = F_MAT @ self.x
-        self.P = F_MAT @ self.P @ F_MAT.T + Q_MAT
-        return self.x.copy()
-
-    def update(self, cx: float, cy: float, w: float, h: float) -> None:
-        z = np.array([cx, cy, w, h], dtype=np.float64)
-        y = z - H_MAT @ self.x
-        S = H_MAT @ self.P @ H_MAT.T + R_MAT
-        K = self.P @ H_MAT.T @ np.linalg.inv(S)
-        self.x = self.x + K @ y
-        self.P = (np.eye(STATE_DIM) - K @ H_MAT) @ self.P
-
-    def position_uncertainty(self) -> float:
-        """2σ positional search-radius term (reference tracking.py:407-435):
-        ``2 * sqrt(P[0,0] + P[1,1])``."""
-        return 2.0 * float(np.sqrt(self.P[0, 0] + self.P[1, 1]))

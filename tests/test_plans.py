@@ -487,18 +487,12 @@ def test_bench_output_contract(spark, sf_dir, monkeypatch, capsys):
     assert set(json.loads(full)["extended"]) == {"q_lag_features"}
 
 
-def test_scatter_flag_disables_repartition(spark):
-    import os
-
+def test_scatter_spreads_to_default_parallelism(spark):
     from iceberg_tracking_spark.sources.tables import scatter
 
-    df = spark.range(10)
-    os.environ["SPARK_GRAFT_SCATTER"] = "0"
-    try:
-        assert scatter(df) is df
-    finally:
-        del os.environ["SPARK_GRAFT_SCATTER"]
-    assert scatter(df) is not df
+    df = spark.range(10).coalesce(1)
+    spread = scatter(df)
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_readme_query_counts_match_registry():

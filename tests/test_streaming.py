@@ -4,7 +4,6 @@ in order across micro-batches."""
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 
@@ -102,11 +101,18 @@ def test_streaming_session_runs(spark, events_stream_dir):
     assert (got["n_events"] > 0).all()
 
 
-def test_streaming_tracker_equals_batch(spark):
+@pytest.mark.parametrize("frames", ["padded", "unpadded_shuffled"])
+def test_streaming_tracker_equals_batch(spark, frames):
     """Feed 3 frame-ordered micro-batches; final emitted rows must equal
     the batch tracker run over the whole sequence (no length filter —
-    streaming emits online)."""
+    streaming emits online). The second input spells frame ids unpadded
+    ('9' ends the first micro-batch, '10' starts the next) and shuffles
+    rows within each micro-batch, so the streaming side must order
+    frames numerically and dets by obj_id (unique per frame here, so
+    the result does not depend on Spark's row delivery order)."""
     pdf = make_sequence("s1", n_frames=30)
+    if frames == "unpadded_shuffled":
+        pdf["frame"] = pdf["frame"].astype(int).astype(str)
     cfg = TrackerConfig(min_track_length=1)
 
     stream_dir = tempfile.mkdtemp(prefix="det_stream_")
@@ -126,10 +132,9 @@ def test_streaming_tracker_equals_batch(spark):
         try:
             # write 3 chunks in frame order, waiting for each to process
             for lo, hi in [(0, 10), (10, 20), (20, 30)]:
-                chunk = pdf[
-                    pdf["frame"].isin([f"{f:06d}" for f in range(lo, hi)])
-                ]
-                sub = os.path.join(stream_dir, f"chunk_{lo:03d}.parquet")
+                chunk = pdf[pdf["frame"].astype(int).between(lo, hi - 1)]
+                if frames == "unpadded_shuffled":
+                    chunk = chunk.sample(frac=1.0, random_state=lo)
                 spark.createDataFrame(chunk, DET_SCHEMA).coalesce(1).write.mode(
                     "append"
                 ).parquet(stream_dir)
@@ -362,93 +367,6 @@ def test_stream_restart_from_checkpoint_exactly_once(spark):
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(tbl.rsplit("/", 1)[0], ignore_errors=True)
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_streaming_track_tws_gated(spark):
-    """The arbitrary-state-v2 tracker variant must either work (when
-    protobuf is installed) or fail fast with a clear ImportError naming
-    the missing dependency — never a deep stack later at query start."""
-    import pytest
-
-    from iceberg_tracking_spark.streaming.tracker import streaming_track_tws
-
-    if _has_protobuf():
-        pytest.skip("protobuf present; test_streaming_track_tws_equals_batch runs")
-    stream = spark.readStream.schema(DET_SCHEMA).parquet(
-        tempfile.mkdtemp(prefix="tws_")
-    )
-    with pytest.raises(ImportError, match="protobuf"):
-        streaming_track_tws(stream)
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs the protobuf package "
-    "(absent in this container); this parity test activates the moment "
-    "it is installed",
-)
-def test_streaming_track_tws_equals_batch(spark):
-    """TWS-path parity: the transformWithStateInPandas tracker over
-    frame-ordered micro-batches must emit exactly the batch tracker's
-    rows (same contract as the applyInPandasWithState variant)."""
-    from iceberg_tracking_spark.streaming.tracker import streaming_track_tws
-
-    pdf = make_sequence("s1", n_frames=30)
-    cfg = TrackerConfig(min_track_length=1)
-    stream_dir = tempfile.mkdtemp(prefix="det_tws_stream_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_tws_")
-    prior_provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema(DET_SCHEMA).option(
-            "maxFilesPerTrigger", 1
-        ).parquet(stream_dir)
-        out = streaming_track_tws(stream, cfg)
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("tracks_tws_out")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            for lo, hi in [(0, 10), (10, 20), (20, 30)]:
-                chunk = pdf[
-                    pdf["frame"].isin([f"{f:06d}" for f in range(lo, hi)])
-                ]
-                spark.createDataFrame(chunk, DET_SCHEMA).coalesce(1).write.mode(
-                    "append"
-                ).parquet(stream_dir)
-                q.processAllAvailable()
-            got = spark.sql("SELECT * FROM tracks_tws_out").toPandas()
-        finally:
-            q.stop()
-    finally:
-        if prior_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prior_provider
-            )
-        shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    want = track_one_sequence_pdf(pdf, cfg)
-    key = ["sequence", "frame", "track_id", "det_id"]
-    got_s = got[key].sort_values(key).reset_index(drop=True)
-    want_s = want[key].sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got_s, want_s, check_dtype=False)
 
 
 def test_streaming_dedup_drops_redeliveries(spark, sf_dir):
@@ -1312,7 +1230,8 @@ def test_streaming_tracker_throughput_and_state_bounded(spark):
     of serial-flat. Also pins the state-size growth law: serialized
     per-sequence state is O(active tracks) — 6+36 doubles per track —
     and INDEPENDENT of frames processed (history rows are emitted,
-    never retained), so state never grows with stream length."""
+    never retained: the tracker holds only its stacked per-track
+    arrays), so state never grows with stream length."""
     import time
 
     import numpy as np

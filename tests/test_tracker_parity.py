@@ -9,6 +9,8 @@ test drives both implementations over the same detections and asserts
 the emitted rows are identical — values bit-for-bit (the vectorized
 math evaluates the same float64 expressions elementwise; stacked
 matmul/inv use the same kernels per 2-d slice) and in the same order.
+`KalmanBoxTracker` and `_Track` are the per-object filter and track
+record the pre-r13 code stored; the frozen reference is their only user.
 
 Scenarios stress the paths where a vectorization bug would hide:
 duplicate obj_ids inside a frame (the unstable quicksort must be the
@@ -19,6 +21,8 @@ single-track frames.
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -26,15 +30,65 @@ import pytest
 from iceberg_tracking_spark.tracker.batch import (
     SequenceTracker,
     TrackerConfig,
-    _Track,
     frame_order,
     track_one_sequence_pdf,
 )
-from iceberg_tracking_spark.tracker.kalman import KalmanBoxTracker
+from iceberg_tracking_spark.tracker.kalman import (
+    F_MAT,
+    H_MAT,
+    P0_MAT,
+    Q_MAT,
+    R_MAT,
+    STATE_DIM,
+)
+
+# The pre-r13 grid cell (the former `TrackerConfig.cell_size` default).
+# The grid walk is radius-lossless, so the cell only affects speed.
+_CELL_SIZE = 100.0
 
 
-class _ReferenceTracker(SequenceTracker):
+class KalmanBoxTracker:
+    """Per-object constant-velocity filter (reference tracking.py:234-369)."""
+
+    def __init__(self, cx: float, cy: float, w: float, h: float) -> None:
+        self.x = np.array([cx, cy, 0.0, 0.0, w, h], dtype=np.float64)
+        self.P = P0_MAT.copy()
+
+    def predict(self) -> np.ndarray:
+        self.x = F_MAT @ self.x
+        self.P = F_MAT @ self.P @ F_MAT.T + Q_MAT
+        return self.x.copy()
+
+    def update(self, cx: float, cy: float, w: float, h: float) -> None:
+        z = np.array([cx, cy, w, h], dtype=np.float64)
+        y = z - H_MAT @ self.x
+        S = H_MAT @ self.P @ H_MAT.T + R_MAT
+        K = self.P @ H_MAT.T @ np.linalg.inv(S)
+        self.x = self.x + K @ y
+        self.P = (np.eye(STATE_DIM) - K @ H_MAT) @ self.P
+
+    def position_uncertainty(self) -> float:
+        """2σ positional search-radius term (reference tracking.py:407-435):
+        ``2 * sqrt(P[0,0] + P[1,1])``."""
+        return 2.0 * float(np.sqrt(self.P[0, 0] + self.P[1, 1]))
+
+
+@dataclass
+class _Track:
+    track_id: int
+    kf: KalmanBoxTracker
+    time_since_update: int = 0
+    hits: int = 0
+    history: list = field(default_factory=list)
+
+
+class _ReferenceTracker:
     """Frozen pre-r13 step(): grid prune + scalar math + per-track KF."""
+
+    def __init__(self, config: TrackerConfig) -> None:
+        self.cfg = config
+        self.tracks: list[_Track] = []
+        self.next_id = 1
 
     def step(self, frame, dets, det_ids, confs):  # noqa: C901 — frozen copy
         cfg = self.cfg
@@ -44,7 +98,7 @@ class _ReferenceTracker(SequenceTracker):
         if len(self.tracks) and len(dets):
             cx = dets[:, 0] + dets[:, 2] / 2.0
             cy = dets[:, 1] + dets[:, 3] / 2.0
-            cell = cfg.cell_size
+            cell = _CELL_SIZE
             grid: dict[tuple[int, int], list[int]] = {}
             for j in range(len(dets)):
                 grid.setdefault((int(cx[j] // cell), int(cy[j] // cell)), []).append(j)
@@ -285,9 +339,41 @@ def test_parity_exact_threshold_sizes():
     _assert_identical(pdf, TrackerConfig())
 
 
+def _reference_to_state(ref: _ReferenceTracker) -> tuple:
+    """The streaming state tuple, built per track from the reference's
+    `_Track` objects (the pre-stacked serializer)."""
+    xs: list[float] = []
+    ps: list[float] = []
+    for tr in ref.tracks:
+        xs.extend(tr.kf.x.tolist())
+        ps.extend(tr.kf.P.flatten().tolist())
+    return (
+        ref.next_id,
+        [tr.track_id for tr in ref.tracks],
+        [tr.time_since_update for tr in ref.tracks],
+        [tr.hits for tr in ref.tracks],
+        xs,
+        ps,
+    )
+
+
+def _reference_from_state(state_tuple: tuple, cfg: TrackerConfig) -> _ReferenceTracker:
+    ref = _ReferenceTracker(cfg)
+    next_id, track_ids, tsu, hits, xs, ps = state_tuple
+    ref.next_id = next_id
+    for i in range(len(track_ids)):
+        kf = KalmanBoxTracker(0, 0, 0, 0)
+        kf.x = np.array(xs[i * STATE_DIM : (i + 1) * STATE_DIM], dtype=np.float64)
+        kf.P = np.array(ps[i * 36 : (i + 1) * 36], dtype=np.float64).reshape(6, 6)
+        ref.tracks.append(
+            _Track(track_id=track_ids[i], kf=kf, time_since_update=tsu[i], hits=hits[i])
+        )
+    return ref
+
+
 def test_parity_streaming_state_roundtrip():
-    """The streaming serializer reads tracks/kf.x/kf.P — the stacked
-    update must leave state the serializer can round-trip with values
+    """The streaming serializer reads the stacked ids/tsu/hits/X/P —
+    the stacked step must leave state that round-trips with values
     identical to the reference tracker's."""
     from iceberg_tracking_spark.streaming.tracker import (
         _tracker_from_state,
@@ -308,10 +394,8 @@ def test_parity_streaming_state_roundtrip():
         a = new.step(frame, box[sel], obj[sel], conf[sel])
         b = ref.step(frame, box[sel], obj[sel], conf[sel])
         assert a == b
-        sa, sb = _tracker_to_state(new), _tracker_to_state(ref)
+        sa, sb = _tracker_to_state(new), _reference_to_state(ref)
         assert sa == sb
         # round-trip then keep stepping the round-tripped tracker
         new = _tracker_from_state(sa, cfg)
-        ref_state = _tracker_from_state(sb, cfg)
-        ref = _ReferenceTracker(cfg)
-        ref.next_id, ref.tracks = ref_state.next_id, ref_state.tracks
+        ref = _reference_from_state(sb, cfg)
