@@ -524,10 +524,6 @@ def parse_media_head(head: bytes, file_size: int) -> dict[str, Any] | None:
         return None
 
 
-_CATALOG_COLS = [
-    "path", "file_size", "format", "codec", "width", "height",
-    "has_alpha", "is_animated", "decodable", "bytes_read",
-]
 CATALOG_SCHEMA = (
     "path string, file_size long, format string, codec string, "
     "width int, height int, has_alpha boolean, is_animated boolean, "
@@ -551,36 +547,32 @@ def catalog_from_listing(
     Emits the catalog row plus `bytes_read` (actual IO per file, for
     accounting and the boundedness test); q_media_catalog drops it.
     """
+    from .multimodal import map_rows
+
     head_bytes = max(int(head_bytes), MIN_HEAD_BYTES)
 
-    def _scan(batches):
-        import pandas as pd
+    def _scan(r):
+        size = int(r.file_size)
+        try:
+            with open(r.path, "rb") as f:
+                head = f.read(min(head_bytes, size))
+                info = parse_media_head(head, size)
+                read = len(head)
+                if info is None:
+                    f.seek(0)
+                    data = f.read()
+                    read = len(data)
+                    info = parse_media_header(data)
+        except OSError:
+            # listed-then-vanished file: the S2 tolerance convention
+            # (catalog as unknown, never raise)
+            info, read = dict(_NULL_ROW), 0
+        return [
+            (
+                r.path, size, info["format"], info["codec"],
+                info["width"], info["height"], info["has_alpha"],
+                info["is_animated"], info["decodable"], read,
+            )
+        ]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                size = int(r.file_size)
-                try:
-                    with open(r.path, "rb") as f:
-                        head = f.read(min(head_bytes, size))
-                        info = parse_media_head(head, size)
-                        read = len(head)
-                        if info is None:
-                            f.seek(0)
-                            data = f.read()
-                            read = len(data)
-                            info = parse_media_header(data)
-                except OSError:
-                    # listed-then-vanished file: the S2 tolerance
-                    # convention (catalog as unknown, never raise)
-                    info, read = dict(_NULL_ROW), 0
-                rows.append(
-                    (
-                        r.path, size, info["format"], info["codec"],
-                        info["width"], info["height"], info["has_alpha"],
-                        info["is_animated"], info["decodable"], read,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=_CATALOG_COLS)
-
-    return listing.mapInPandas(_scan, schema=CATALOG_SCHEMA)
+    return map_rows(listing, CATALOG_SCHEMA, _scan)

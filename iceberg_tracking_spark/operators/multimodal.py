@@ -2,10 +2,13 @@
 
 Media (image/audio/video) is carried as an opaque `binary` column with
 typed metadata (schemas.MEDIA_SCHEMA). Decode / feature-extract /
-resize / frame-sample run as Arrow-batched `mapInPandas` functions so
-each partition amortizes decoder initialization — the distributed form
-of the reference's per-worker model/DataLoader setup
-(embedding.py:1358-1362).
+resize / frame-sample cross into Python through one row-wise boundary,
+`map_rows`: an Arrow-batched `mapInPandas` whose per-row function
+returns output tuples in schema order, so the schema string is the one
+place that names an operator's output columns. The scans
+(`media_from_*`) stay pure Catalyst: header fields are read from the
+hex encoding (`_hex_byte`) and the media id from the file name
+(`path_media_id`).
 
 Decode is REAL for PGM, PNG and baseline JPEG blobs — the pure-numpy
 codecs in operators/imagecodec.py (PGM; PNG via stdlib-zlib inflate +
@@ -25,12 +28,45 @@ from __future__ import annotations
 
 import hashlib
 import math
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def map_rows(
+    df: DataFrame, schema: str, row_fn: Callable[[tuple], Iterable[tuple]]
+) -> DataFrame:
+    """Row-wise Python map over Arrow batches: `row_fn(r)` returns the
+    output rows for one input row `r` (a pandas `itertuples` record),
+    each a tuple in `schema` order — zero, one or many per input row.
+
+    Output frames carry no column labels: pyspark assigns unlabelled
+    columns to `schema` by position, and takes an empty column-less
+    frame for a batch that yields no rows."""
+
+    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [out for r in pdf.itertuples(index=False) for out in row_fn(r)]
+            )
+
+    return df.mapInPandas(_map, schema=schema)
+
+
+def path_media_id() -> Column:
+    """Media id from the numeric stem of the file name in `path`
+    ('.../0007.png' -> 7; NULL when the stem is not a number)."""
+    return F.element_at(
+        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
+    ).cast("long")
+
+
+def _hex_byte(hx: Column, off: int) -> Column:
+    """Byte at 0-based offset `off` of a lowercase-hex string, as int."""
+    return F.conv(F.substring(hx, 2 * off + 1, 2), 16, 10).cast("int")
 
 
 def synthesize_media_table(
@@ -67,12 +103,7 @@ def media_from_binary_files(
     # Numeric basename → id; anything else falls back to a stable hash
     # of the path (a NULL id would poison the derived width/height and
     # crash the downstream mapInPandas decode on int(None)).
-    media_id = F.coalesce(
-        F.element_at(
-            F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-        ).cast("long"),
-        F.abs(F.xxhash64(F.col("path"))),
-    )
+    media_id = F.coalesce(path_media_id(), F.abs(F.xxhash64(F.col("path"))))
     return raw.select(
         media_id.alias("media_id"),
         F.lit(modality).alias("modality"),
@@ -171,11 +202,8 @@ def media_from_image_files(spark: SparkSession, path: str | None = None) -> Data
     hx = F.lower(F.hex(F.substring(F.col("content"), 1, 20)))
     width_hex = F.regexp_extract(hx, r"^50350a((?:3[0-9])+)20", 1)
     height_hex = F.regexp_extract(hx, r"^50350a(?:3[0-9])+20((?:3[0-9])+)0a", 1)
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
     return raw.select(
-        media_id.alias("media_id"),
+        path_media_id().alias("media_id"),
         F.lit("image").alias("modality"),
         F.col("content"),
         F.lit("image/x-portable-graymap").alias("mime_type"),
@@ -194,11 +222,8 @@ def media_from_png_files(spark: SparkSession, path: str | None = None) -> DataFr
 
     raw = read_binary_files(spark, path or ensure_png_fixture(), glob="*.png")
     hx = F.lower(F.hex(F.substring(F.col("content"), 1, 24)))
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
     return raw.select(
-        media_id.alias("media_id"),
+        path_media_id().alias("media_id"),
         F.lit("image").alias("modality"),
         F.col("content"),
         F.lit("image/png").alias("mime_type"),
@@ -218,28 +243,19 @@ def media_from_gif_files(spark: SparkSession, path: str | None = None) -> DataFr
 
     raw = read_binary_files(spark, path or ensure_gif_fixture(), glob="*.gif")
     hx = F.lower(F.hex(F.substring(F.col("content"), 1, 10)))
-
-    def _le16(off: int):  # 0-based byte offset → little-endian u16
-        lo = F.conv(F.substring(hx, 2 * off + 1, 2), 16, 10).cast("int")
-        hi = F.conv(F.substring(hx, 2 * off + 3, 2), 16, 10).cast("int")
-        return lo + hi * 256
-
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
     return raw.select(
-        media_id.alias("media_id"),
+        path_media_id().alias("media_id"),
         F.lit("image").alias("modality"),
         F.col("content"),
         F.lit("image/gif").alias("mime_type"),
-        _le16(6).alias("width"),
-        _le16(8).alias("height"),
+        (_hex_byte(hx, 6) + _hex_byte(hx, 7) * 256).alias("width"),
+        (_hex_byte(hx, 8) + _hex_byte(hx, 9) * 256).alias("height"),
         F.lit(None).cast("long").alias("duration_ms"),
     )
 
 
 def extract_media_features(
-    media: DataFrame, decode_stub: bool = True, batch_note: str = "decode"
+    media: DataFrame, decode_stub: bool = True
 ) -> DataFrame:
     """Decode + feature-extract per blob via mapInPandas.
 
@@ -249,52 +265,31 @@ def extract_media_features(
     perceptual-hash stand-in; ASCII rather than raw bytes so the SQL
     oracle can rebuild the exact digest input with string_agg).
     """
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Per-partition decoder init would go here (load codec/model once).
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mat = decode_media(
-                    bytes(r.content), int(r.width), int(r.height), decode_stub
-                )
-                small = mat[::8, ::8]
-                bits = (small > small.mean()).astype(np.uint8).ravel()
-                phash = hashlib.md5(
-                    "".join(map(str, bits)).encode()
-                ).hexdigest()
-                # mean/std via EXACT integer moments then the closed
-                # form sqrt(SS/N - (S/N)^2) — the same float-op
-                # sequence the SQL oracle uses (sum-of-ints * 1.0 / N).
-                # numpy's two-pass mat.std() differs by up to ~1e-13,
-                # enough to flip round(.,6) on a grid boundary.
-                m64 = mat.astype(np.int64)
-                n_px = int(m64.size)
-                s = int(m64.sum())
-                ss = int((m64 * m64).sum())
-                mean = s / n_px
-                std = math.sqrt(ss / n_px - mean * mean)
-                rows.append(
-                    (
-                        r.media_id,
-                        len(bytes(r.content)),
-                        mean,
-                        std,
-                        phash,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_bytes", "mean_intensity", "std_intensity", "phash",
-                ],
-            )
+    def _features(r):
+        mat = decode_media(
+            bytes(r.content), int(r.width), int(r.height), decode_stub
+        )
+        small = mat[::8, ::8]
+        bits = (small > small.mean()).astype(np.uint8).ravel()
+        phash = hashlib.md5("".join(map(str, bits)).encode()).hexdigest()
+        # mean/std via EXACT integer moments then the closed form
+        # sqrt(SS/N - (S/N)^2) — the same float-op sequence the SQL
+        # oracle uses (sum-of-ints * 1.0 / N). numpy's two-pass
+        # mat.std() differs by up to ~1e-13, enough to flip round(.,6)
+        # on a grid boundary.
+        m64 = mat.astype(np.int64)
+        n_px = int(m64.size)
+        s = int(m64.sum())
+        ss = int((m64 * m64).sum())
+        mean = s / n_px
+        std = math.sqrt(ss / n_px - mean * mean)
+        return [(r.media_id, len(bytes(r.content)), mean, std, phash)]
 
-    return media.select("media_id", "content", "width", "height").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content", "width", "height"),
+        "media_id long, n_bytes long, mean_intensity double, "
+        "std_intensity double, phash string",
         _features,
-        schema=(
-            "media_id long, n_bytes long, mean_intensity double, "
-            "std_intensity double, phash string"
-        ),
     )
 
 
@@ -336,24 +331,17 @@ def media_from_webp_files(spark: SparkSession, path: str | None = None) -> DataF
     hx = F.lower(F.hex(F.substring(F.col("content"), 1, 25)))
     # bytes 12-15 == 'VP8L' (hex 5650384c): hex chars 25..32
     raw = raw.where(F.substring(hx, 25, 8) == F.lit("5650384c"))
-
-    def _u8(off: int):  # 0-based byte offset
-        return F.conv(F.substring(hx, 2 * off + 1, 2), 16, 10).cast("int")
-
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
     return raw.select(
-        media_id.alias("media_id"),
+        path_media_id().alias("media_id"),
         F.lit("image").alias("modality"),
         F.col("content"),
         F.lit("image/webp").alias("mime_type"),
         (
-            F.lit(1) + _u8(21) + (_u8(22) % 64) * 256
+            F.lit(1) + _hex_byte(hx, 21) + (_hex_byte(hx, 22) % 64) * 256
         ).alias("width"),
         (
-            F.lit(1) + F.floor(_u8(22) / 64).cast("int")
-            + _u8(23) * 4 + (_u8(24) % 16) * 1024
+            F.lit(1) + F.floor(_hex_byte(hx, 22) / 64).cast("int")
+            + _hex_byte(hx, 23) * 4 + (_hex_byte(hx, 24) % 16) * 1024
         ).cast("int").alias("height"),
         F.lit(None).cast("long").alias("duration_ms"),
     )
@@ -366,32 +354,18 @@ def extract_pixel_stats(media: DataFrame) -> DataFrame:
     px_sum is the exact integer moment; mean is its ONE division (the
     house exactness style), rounded at the query layer."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mat = decode_media(
-                    bytes(r.content), int(r.width), int(r.height),
-                    decode_stub=False,
-                )
-                m64 = mat.astype(np.int64)
-                s = int(m64.sum())
-                rows.append(
-                    (r.media_id, s, int(m64.max()), s / m64.size)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "px_sum", "max_intensity", "mean_intensity",
-                ],
-            )
+    def _stats(r):
+        mat = decode_media(
+            bytes(r.content), int(r.width), int(r.height), decode_stub=False
+        )
+        m64 = mat.astype(np.int64)
+        s = int(m64.sum())
+        return [(r.media_id, s, int(m64.max()), s / m64.size)]
 
-    return media.select("media_id", "content", "width", "height").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content", "width", "height"),
+        "media_id long, px_sum long, max_intensity long, mean_intensity double",
         _stats,
-        schema=(
-            "media_id long, px_sum long, max_intensity long, "
-            "mean_intensity double"
-        ),
     )
 
 
@@ -424,29 +398,18 @@ def decode_resize_pad(
     formats follow the decode_stub contract of decode_media."""
     from .imagecodec import resize_bilinear
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mat = decode_media(
-                    bytes(r.content), int(r.width), int(r.height), decode_stub
-                )
-                out = np.rint(resize_bilinear(mat, out_h, out_w)).astype(np.uint8)
-                rows.append(
-                    (
-                        r.media_id,
-                        float(out.mean()),
-                        float(out.std()),
-                        [int(v) for v in out[:8, :8].ravel()],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "out_mean", "out_std", "thumb"]
-            )
+    def _resize(r):
+        mat = decode_media(
+            bytes(r.content), int(r.width), int(r.height), decode_stub
+        )
+        out = np.rint(resize_bilinear(mat, out_h, out_w)).astype(np.uint8)
+        thumb = [int(v) for v in out[:8, :8].ravel()]
+        return [(r.media_id, float(out.mean()), float(out.std()), thumb)]
 
-    return media.select("media_id", "content", "width", "height").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content", "width", "height"),
+        "media_id long, out_mean double, out_std double, thumb array<int>",
         _resize,
-        schema="media_id long, out_mean double, out_std double, thumb array<int>",
     )
 
 
@@ -470,12 +433,9 @@ def media_from_audio_files(spark: SparkSession, path: str | None = None) -> Data
     hx = F.lower(F.hex(F.substring(F.col("content"), 1, 48)))
 
     def _le32(start_byte: int):  # 0-based byte offset → little-endian u32
-        val = F.lit(0)
+        val = F.lit(0).cast("long")
         for k in range(3, -1, -1):
-            b = F.conv(
-                F.substring(hx, 2 * (start_byte + k) + 1, 2), 16, 10
-            ).cast("long")
-            val = val * 256 + b
+            val = val * 256 + _hex_byte(hx, start_byte + k)
         return val
 
     canonical = (
@@ -484,13 +444,10 @@ def media_from_audio_files(spark: SparkSession, path: str | None = None) -> Data
         (F.substring(hx, 2 * 12 + 1, 8) == "666d7420")
         & (F.substring(hx, 2 * 36 + 1, 8) == "64617461")
     )
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
     n_samples = F.when(canonical, (_le32(40) / 2).cast("long"))
     rate = F.when(canonical, _le32(24))
     return raw.select(
-        media_id.alias("media_id"),
+        path_media_id().alias("media_id"),
         F.lit("audio").alias("modality"),
         F.col("content"),
         F.lit("audio/wav").alias("mime_type"),
@@ -507,35 +464,24 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     amortized decoder pattern as the image path."""
     from .audiocodec import audio_features, decode_wav
 
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                samples, rate = decode_wav(bytes(r.content))
-                f = audio_features(samples, rate)
-                rows.append(
-                    (
-                        r.media_id,
-                        int(f["n_samples"]),
-                        float(f["duration_ms"]),
-                        float(f["rms"]),
-                        float(f["peak"]),
-                        float(f["zcr"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "duration_ms", "rms", "peak", "zcr",
-                ],
+    def _features(r):
+        f = audio_features(*decode_wav(bytes(r.content)))
+        return [
+            (
+                r.media_id,
+                int(f["n_samples"]),
+                float(f["duration_ms"]),
+                float(f["rms"]),
+                float(f["peak"]),
+                float(f["zcr"]),
             )
+        ]
 
-    return media.select("media_id", "content").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content"),
+        "media_id long, n_samples long, duration_ms double, "
+        "rms double, peak double, zcr double",
         _features,
-        schema=(
-            "media_id long, n_samples long, duration_ms double, "
-            "rms double, peak double, zcr double"
-        ),
     )
 
 
@@ -552,13 +498,10 @@ def media_from_video_files(spark: SparkSession, path: str | None = None) -> Data
     h_hex = F.regexp_extract(
         hx, r"^595556344d504547322057(?:3[0-9])+2048((?:3[0-9])+)20", 1
     )
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
     width = F.regexp_replace(w_hex, "3(.)", "$1").cast("int")
     height = F.regexp_replace(h_hex, "3(.)", "$1").cast("int")
     return raw.select(
-        media_id.alias("media_id"),
+        path_media_id().alias("media_id"),
         F.lit("video").alias("modality"),
         F.col("content"),
         F.lit("video/x-yuv4mpeg").alias("mime_type"),
@@ -576,38 +519,18 @@ def extract_video_frames(media: DataFrame) -> DataFrame:
     embarrassingly parallel; a 100 TB corpus adds files, not state."""
     from .audiocodec import decode_y4m
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                frames, fps = decode_y4m(bytes(r.content))
-                for idx in range(frames.shape[0]):
-                    f = frames[idx].astype(np.float64)
-                    rows.append(
-                        (
-                            r.media_id,
-                            int(idx),
-                            int(frames.shape[2]),
-                            int(frames.shape[1]),
-                            int(fps),
-                            float(f.mean()),
-                            float(f.std()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height", "fps",
-                    "frame_mean", "frame_std",
-                ],
-            )
+    def _frames(r):
+        frames, fps = decode_y4m(bytes(r.content))
+        n, h, w = frames.shape
+        for idx in range(n):
+            f = frames[idx].astype(np.float64)  # one frame widened at a time
+            yield (r.media_id, idx, w, h, int(fps), float(f.mean()), float(f.std()))
 
-    return media.select("media_id", "content").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content"),
+        "media_id long, frame_idx int, width int, height int, fps int, "
+        "frame_mean double, frame_std double",
         _frames,
-        schema=(
-            "media_id long, frame_idx int, width int, height int, fps int, "
-            "frame_mean double, frame_std double"
-        ),
     )
 
 
@@ -622,42 +545,22 @@ def extract_video_motion(media: DataFrame) -> DataFrame:
     extract_video_frames: per-file splits, embarrassingly parallel."""
     from .audiocodec import decode_y4m
 
-    def _motion(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                frames, _fps = decode_y4m(bytes(r.content))
-                # Rolling two-frame buffer: widen only the current pair
-                # to int64 (never the whole clip at 8x raw size), so
-                # peak state really is two frames regardless of clip
-                # length.
-                prev = frames[0].astype(np.int64)
-                for idx in range(1, frames.shape[0]):
-                    cur = frames[idx].astype(np.int64)
-                    d = int(np.abs(cur - prev).sum())
-                    prev = cur
-                    rows.append(
-                        (
-                            r.media_id,
-                            int(idx),
-                            int(frames.shape[2]),
-                            int(frames.shape[1]),
-                            d,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height", "motion_sum",
-                ],
-            )
+    def _motion(r):
+        frames, _fps = decode_y4m(bytes(r.content))
+        n, h, w = frames.shape
+        # Rolling two-frame buffer: widen only the current pair to int64
+        # (never the whole clip at 8x raw size), so peak state really is
+        # two frames regardless of clip length.
+        prev = frames[0].astype(np.int64)
+        for idx in range(1, n):
+            cur = frames[idx].astype(np.int64)
+            yield (r.media_id, idx, w, h, int(np.abs(cur - prev).sum()))
+            prev = cur
 
-    return media.select("media_id", "content").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content"),
+        "media_id long, frame_idx int, width int, height int, motion_sum long",
         _motion,
-        schema=(
-            "media_id long, frame_idx int, width int, height int, "
-            "motion_sum long"
-        ),
     )
 
 
@@ -676,39 +579,17 @@ def extract_gif_frames(media: DataFrame) -> DataFrame:
     single logical-screen canvas, one int64 frame widened at a time)."""
     from .gifcodec import decode_gif
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                frames, delays = decode_gif(bytes(r.content))
-                for idx in range(frames.shape[0]):
-                    g = frames[idx].astype(np.int64).sum(axis=2) // 3
-                    s = int(g.sum())
-                    rows.append(
-                        (
-                            r.media_id,
-                            int(idx),
-                            int(g.shape[1]),
-                            int(g.shape[0]),
-                            int(delays[idx]),
-                            s,
-                            int(g.max()),
-                            s / g.size,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height", "delay_ms",
-                    "px_sum", "max_intensity", "frame_mean",
-                ],
-            )
+    def _frames(r):
+        frames, delays = decode_gif(bytes(r.content))
+        for idx in range(frames.shape[0]):
+            g = frames[idx].astype(np.int64).sum(axis=2) // 3
+            s = int(g.sum())
+            h, w = g.shape
+            yield (r.media_id, idx, w, h, int(delays[idx]), s, int(g.max()), s / g.size)
 
-    return media.select("media_id", "content").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content"),
+        "media_id long, frame_idx int, width int, height int, "
+        "delay_ms int, px_sum long, max_intensity long, frame_mean double",
         _frames,
-        schema=(
-            "media_id long, frame_idx int, width int, height int, "
-            "delay_ms int, px_sum long, max_intensity long, "
-            "frame_mean double"
-        ),
     )

@@ -1082,27 +1082,22 @@ def q_image_similarity(spark, sf_dir):
     the LSH/IVF candidates path (q_ann_lsh / q_ann_ivf) — identical
     relation shapes.
     """
+    import numpy as np
+
     from ..operators.imagecodec import crop_pad
-    from ..operators.multimodal import decode_media, media_from_image_files
+    from ..operators.multimodal import decode_media, map_rows, media_from_image_files
     from ..operators.similarity import brute_force_topk
 
-    import numpy as _np
-    import pandas as _pd
-    from typing import Iterator as _Iterator
+    def _embed(r):
+        mat = decode_media(bytes(r.content), 0, 0, decode_stub=False)
+        crop = crop_pad(mat, 0, 0, 16, 16).astype(np.float64)
+        pooled = crop.reshape(4, 4, 4, 4).mean(axis=(1, 3))
+        return [(r.media_id, [float(v) for v in pooled.ravel()])]
 
-    def _embed(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mat = decode_media(bytes(r.content), 0, 0, decode_stub=False)
-                crop = crop_pad(mat, 0, 0, 16, 16).astype(_np.float64)
-                pooled = crop.reshape(4, 4, 4, 4).mean(axis=(1, 3))
-                rows.append((r.media_id, [float(v) for v in pooled.ravel()]))
-            yield _pd.DataFrame(rows, columns=["media_id", "emb"])
-
-    media = media_from_image_files(spark)
-    emb = media.select("media_id", "content").mapInPandas(
-        _embed, schema="media_id long, emb array<double>"
+    emb = map_rows(
+        media_from_image_files(spark).select("media_id", "content"),
+        "media_id long, emb array<double>",
+        _embed,
     )
     q = emb.select(F.col("media_id").alias("qid"), F.col("emb").alias("qe"))
     return brute_force_topk(
@@ -1194,26 +1189,21 @@ def q_image_resize(spark, sf_dir):
     Scale shape: identical to q_image_decode — binaryFile splits per
     file, the decode+resample is embarrassingly parallel with
     per-partition codec amortization."""
-    from typing import Iterator
-
-    import pandas as pd
-
     from ..operators.imagecodec import decode_pgm, resize_bilinear
-    from ..operators.multimodal import media_from_image_files
+    from ..operators.multimodal import map_rows, media_from_image_files
 
-    def _resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                out = resize_bilinear(decode_pgm(bytes(rec.content)), 16, 16)
-                for r in range(8):
-                    for c in range(8):
-                        rows.append((rec.media_id, r, c, float(out[r, c])))
-            yield pd.DataFrame(rows, columns=["media_id", "r", "c", "val"])
+    def _resample(rec):
+        out = resize_bilinear(decode_pgm(bytes(rec.content)), 16, 16)
+        return [
+            (rec.media_id, r, c, float(out[r, c]))
+            for r in range(8)
+            for c in range(8)
+        ]
 
-    media = media_from_image_files(spark).select("media_id", "content")
-    res = media.mapInPandas(
-        _resample, schema="media_id long, r long, c long, val double"
+    res = map_rows(
+        media_from_image_files(spark).select("media_id", "content"),
+        "media_id long, r long, c long, val double",
+        _resample,
     )
     return res.select("media_id", "r", "c", F.round("val", 6).alias("val"))
 
@@ -1461,14 +1451,12 @@ def q_media_catalog(spark, sf_dir):
     parse_media_header) remains available for small corpora where a
     content scan is already materialized."""
     from ..operators.mediacatalog import catalog_from_listing
+    from ..operators.multimodal import path_media_id
     from ..sources.binary import ensure_catalog_fixture, list_files
 
     cat = catalog_from_listing(list_files(spark, ensure_catalog_fixture()))
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
     return cat.select(
-        media_id.alias("media_id"),
+        path_media_id().alias("media_id"),
         F.col("file_size").alias("n_bytes"),
         "format", "codec", "width", "height",
         "has_alpha", "is_animated", "decodable",

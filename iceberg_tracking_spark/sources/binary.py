@@ -37,19 +37,29 @@ FIXTURE_DIR = os.path.join(_REPO_ROOT, ".binary_fixture")
 FIXTURE_N = 32
 
 
+def _write_fixture(path: str, name: str, payload: bytes) -> None:
+    """Write `payload` to `path/name` (making `path` if needed) unless
+    the file already holds exactly these bytes — so a stale or
+    corrupted fixture of the right size is rewritten too."""
+    os.makedirs(path, exist_ok=True)
+    fp = os.path.join(path, name)
+    if os.path.exists(fp):
+        with open(fp, "rb") as f:
+            if f.read() == payload:
+                return
+    with open(fp, "wb") as f:
+        f.write(payload)
+
+
 def ensure_binary_fixture(path: str = FIXTURE_DIR, n: int = FIXTURE_N) -> str:
     """Idempotently write `n` real .bin files with deterministic bytes.
 
     File i holds md5(str(i)) repeated (i % 7 + 1) times — distinct
     lengths and contents, byte-identical on every machine.
     """
-    os.makedirs(path, exist_ok=True)
     for i in range(n):
-        fp = os.path.join(path, f"{i:04d}.bin")
         payload = hashlib.md5(str(i).encode()).digest() * (i % 7 + 1)
-        if not (os.path.exists(fp) and os.path.getsize(fp) == len(payload)):
-            with open(fp, "wb") as f:
-                f.write(payload)
+        _write_fixture(path, f"{i:04d}.bin", payload)
     return path
 
 
@@ -114,16 +124,11 @@ def ensure_image_fixture(
 
     from ..operators.imagecodec import encode_pgm
 
-    os.makedirs(path, exist_ok=True)
     for i in range(n):
         h, w = 24 + i % 17, 32 + i % 13
         yy, xx = np.mgrid[0:h, 0:w]
         mat = ((xx * (i + 2) + yy * (i + 5) + (i * 37)) % 256).astype(np.uint8)
-        payload = encode_pgm(mat)
-        fp = os.path.join(path, f"{i:04d}.pgm")
-        if not (os.path.exists(fp) and os.path.getsize(fp) == len(payload)):
-            with open(fp, "wb") as f:
-                f.write(payload)
+        _write_fixture(path, f"{i:04d}.pgm", encode_pgm(mat))
     return path
 
 
@@ -143,7 +148,6 @@ def ensure_audio_fixture(
 
     from ..operators.audiocodec import encode_wav
 
-    os.makedirs(path, exist_ok=True)
     for i in range(n):
         ns = 180 + i * 13
         t = np.arange(ns)
@@ -152,11 +156,7 @@ def ensure_audio_fixture(
         tri = np.abs((t * (i + 3)) % 2000 - 1000) - 500
         ramp = (t * 7) % 301 - 150
         samples = (tri * 20 + ramp * 10).astype(np.int16)
-        payload = encode_wav(samples, sample_rate=8000)
-        fp = os.path.join(path, f"{i:04d}.wav")
-        if not (os.path.exists(fp) and os.path.getsize(fp) == len(payload)):
-            with open(fp, "wb") as f:
-                f.write(payload)
+        _write_fixture(path, f"{i:04d}.wav", encode_wav(samples, sample_rate=8000))
     return path
 
 
@@ -175,7 +175,6 @@ def ensure_video_fixture(
 
     from ..operators.audiocodec import encode_y4m
 
-    os.makedirs(path, exist_ok=True)
     h, w = 24, 32
     for i in range(n):
         nf = 3 + i % 5
@@ -186,11 +185,7 @@ def ensure_video_fixture(
                 for f in range(nf)
             ]
         )
-        payload = encode_y4m(frames, fps=25)
-        fp = os.path.join(path, f"{i:04d}.y4m")
-        if not (os.path.exists(fp) and os.path.getsize(fp) == len(payload)):
-            with open(fp, "wb") as f:
-                f.write(payload)
+        _write_fixture(path, f"{i:04d}.y4m", encode_y4m(frames, fps=25))
     return path
 
 
@@ -222,18 +217,13 @@ def ensure_png_fixture(
 
     from ..operators.imagecodec import encode_png
 
-    os.makedirs(path, exist_ok=True)
     for i in range(n):
         h, w = 8 + i % 5, 9 + i % 7
         yy, xx = np.mgrid[0:h, 0:w]
         mat = ((xx * (i + 3) + yy * yy * (i + 2) + i * 41) % 256).astype(
             np.uint8
         )
-        payload = encode_png(mat)
-        fp = os.path.join(path, f"{i:04d}.png")
-        if not (os.path.exists(fp) and os.path.getsize(fp) == len(payload)):
-            with open(fp, "wb") as f:
-                f.write(payload)
+        _write_fixture(path, f"{i:04d}.png", encode_png(mat))
     # file `n`: one color-type-3 (palette) image — the most common
     # remaining web-corpus PNG shape (r7 verdict task #5). Full
     # 256-entry PLTE, deterministic index pattern, same filter cycle;
@@ -248,11 +238,7 @@ def ensure_png_fixture(
         [(lut * 37) % 256, (lut * 91 + 17) % 256, (lut * 53 + 101) % 256],
         axis=1,
     ).astype(np.uint8)
-    payload = encode_png_palette(idx, pal)
-    fp = os.path.join(path, f"{n:04d}.png")
-    if not (os.path.exists(fp) and os.path.getsize(fp) == len(payload)):
-        with open(fp, "wb") as f:
-            f.write(payload)
+    _write_fixture(path, f"{n:04d}.png", encode_png_palette(idx, pal))
     # files n+1..n+4: sub-byte depths (r8 verdict task #3 — the PNG
     # matrix vs PIL). 1/2/4-bit grey + a 4-bit palette, deterministic
     # integer patterns, filter cycle on (≥5 rows each). q_png_decode's
@@ -275,10 +261,7 @@ def ensure_png_fixture(
     ).astype(np.uint8)
     subs.append(encode_png_palette(idx4, pal4, depth=4))
     for j, payload in enumerate(subs):
-        fp = os.path.join(path, f"{n + 1 + j:04d}.png")
-        if not (os.path.exists(fp) and os.path.getsize(fp) == len(payload)):
-            with open(fp, "wb") as f:
-                f.write(payload)
+        _write_fixture(path, f"{n + 1 + j:04d}.png", payload)
     return path
 
 
@@ -302,7 +285,6 @@ def ensure_gif_fixture(
 
     from ..operators.gifcodec import encode_gif
 
-    os.makedirs(path, exist_ok=True)
     for i in range(n):
         h, w = 9 + i % 5, 11 + i % 4
         yy, xx = np.mgrid[0:h, 0:w]
@@ -318,11 +300,7 @@ def ensure_gif_fixture(
             ],
             axis=1,
         ).astype(np.uint8)
-        payload = encode_gif(idx, pal, plain=True)
-        fp = os.path.join(path, f"{i:04d}.gif")
-        if not (os.path.exists(fp) and os.path.getsize(fp) == len(payload)):
-            with open(fp, "wb") as f:
-                f.write(payload)
+        _write_fixture(path, f"{i:04d}.gif", encode_gif(idx, pal, plain=True))
     return path
 
 
@@ -346,16 +324,11 @@ def ensure_webp_fixture(
 
     from ..operators.webpcodec import encode_webp_lossless
 
-    os.makedirs(path, exist_ok=True)
     for i in range(n):
         h, w = 9 + i % 5, 11 + i % 4
         yy, xx = np.mgrid[0:h, 0:w]
         g = ((xx * (i + 3) + yy * (i + 7) + i * 5) % 256).astype(np.uint8)
-        payload = encode_webp_lossless(g, plain=True)
-        fp = os.path.join(path, f"{i:04d}.webp")
-        if not (os.path.exists(fp) and os.path.getsize(fp) == len(payload)):
-            with open(fp, "wb") as f:
-                f.write(payload)
+        _write_fixture(path, f"{i:04d}.webp", encode_webp_lossless(g, plain=True))
     return path
 
 
@@ -382,7 +355,6 @@ def ensure_gif_anim_fixture(
 
     from ..operators.gifcodec import encode_gif
 
-    os.makedirs(path, exist_ok=True)
     for i in range(n):
         nf = 3 + i % 3
         h, w = 9 + i % 4, 11 + i % 3
@@ -410,10 +382,7 @@ def ensure_gif_anim_fixture(
         payload = encode_gif(
             frames, pal, delays_ms=[40 + 10 * f for f in range(nf)]
         )
-        fp = os.path.join(path, f"{i:04d}.gif")
-        if not (os.path.exists(fp) and os.path.getsize(fp) == len(payload)):
-            with open(fp, "wb") as f:
-                f.write(payload)
+        _write_fixture(path, f"{i:04d}.gif", payload)
     return path
 
 
@@ -441,9 +410,8 @@ def ensure_catalog_fixture(
       i%6==5  AVIF image sequence: same tree, brand avis
 
     Two APPENDED alpha-bearing files (indices 12-13, fixed kinds so
-    earlier indices never change bytes under the size-keyed
-    idempotence check) drive the has_alpha=TRUE branches through the
-    driver oracle as well:
+    earlier indices never change bytes) drive the has_alpha=TRUE
+    branches through the DuckDB oracle as well:
 
       i==12   alpha lossy WebP: VP8X(ALPHA flag) + ALPH (16-byte
               filler payload) + the kind-2 VP8 chunk — the codec
@@ -475,7 +443,6 @@ def ensure_catalog_fixture(
     def riff(chunks: bytes) -> bytes:
         return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WEBP" + chunks
 
-    os.makedirs(path, exist_ok=True)
     for i in range(n):
         h, w = 9 + i % 5, 11 + i % 4
         yy, xx = np.mgrid[0:h, 0:w]
@@ -583,8 +550,5 @@ def ensure_catalog_fixture(
             assert hx.count("61757843") == want_auxc, (i, kind)
             if want_auxc:
                 assert hx.find("61757843") % 2 == 0
-        fp = os.path.join(path, f"{i:04d}.{ext}")
-        if not (os.path.exists(fp) and os.path.getsize(fp) == len(data)):
-            with open(fp, "wb") as f:
-                f.write(data)
+        _write_fixture(path, f"{i:04d}.{ext}", data)
     return path

@@ -2,9 +2,8 @@
 BASELINE.json north-star: "Spark DataFrame read/write + compaction jobs").
 
 Local builds write plain partitioned Parquet. The same writer targets an
-Apache Iceberg catalog when its runtime jars are on the classpath
-(`format("iceberg")` — stubbed behind a capability probe here, since
-the jars are not in this container). Compaction is the small-files
+Apache Iceberg table (`format("iceberg")`) when an Iceberg catalog is
+configured on the session; none is configured here. Compaction is the small-files
 maintenance job: rewrite a partitioned table into ~target-sized files,
 preserving partitioning — on Iceberg this maps to
 `rewrite_data_files`; on Parquet it is a repartition-and-rewrite.
@@ -18,15 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """Probe for Iceberg runtime support (jars + catalog conf)."""
-    try:
-        jvm_class = "org.apache.iceberg.spark.SparkCatalog"
-        spark._jvm.java.lang.Class.forName(jvm_class)  # noqa: SLF001
-        return True
-    except Exception:
-        return False
+from .catalog import iceberg_catalog
 
 
 def write_table(
@@ -36,15 +27,16 @@ def write_table(
     mode: str = "overwrite",
     use_iceberg: bool | None = None,
 ) -> None:
-    """Write a table: Iceberg when available/requested, else Parquet.
+    """Write a table: Iceberg when requested or, by default, when an
+    Iceberg catalog is configured on the session (`catalog.iceberg_catalog`,
+    the same test `CatalogTable` uses), else Parquet.
 
     Partition columns should be low-cardinality (e.g. `sequence`,
     a date bucket) — at 100 TB, partitioning by a high-cardinality key
     creates the small-files problem compaction exists to fix.
     """
-    spark = df.sparkSession
     if use_iceberg is None:
-        use_iceberg = iceberg_available(spark)
+        use_iceberg = iceberg_catalog(df.sparkSession) is not None
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)

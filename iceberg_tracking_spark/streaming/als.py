@@ -35,7 +35,6 @@ def make_als_merge_fn(
     app_id: str,
     user_col: str = "o_custkey",
     item_col: str = "l_partkey",
-    expire_keep: int | None = 10,
 ):
     """The foreachBatch callable: join one micro-batch of raw
     (user_col, item_col, r) interactions against the static item-factor
@@ -66,5 +65,4 @@ def make_als_merge_fn(
         [user_col],
         GRAM_SUM_COLS,
         app_id=app_id,
-        expire_keep=expire_keep,
     )

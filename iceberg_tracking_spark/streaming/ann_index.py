@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import DEFAULT_BITS, norm, signature_lsh
 from ..sources.catalog import VersionedTable
+from .materialized import EXPIRE_KEEP
 
 
 PFX_BITS = 4  # sig_pfx = sig mod 2^PFX_BITS → 16 partition directories
@@ -75,7 +76,6 @@ def make_index_merge_fn(
     id_col: str = "vec_id",
     vec_col: str = "e",
     app_id: str = "ann-index",
-    expire_keep: int | None = 10,
 ):
     """The foreachBatch callable maintaining the LSH index table.
     Exposed separately (same contract as materialized.make_merge_fn)
@@ -93,8 +93,7 @@ def make_index_merge_fn(
             # declared once at table birth, inherited by later merges
             partition_by_on_create=["sig_pfx"],
         )
-        if expire_keep is not None:
-            table.expire(keep_last=expire_keep)
+        table.expire(keep_last=EXPIRE_KEEP)
 
     return _merge
 
@@ -107,7 +106,6 @@ def streaming_lsh_index(
     n_bits: int = DEFAULT_BITS,
     id_col: str = "vec_id",
     vec_col: str = "e",
-    expire_keep: int | None = 10,
 ):
     """Start a streaming query maintaining `table` as the live LSH
     index of the vector stream. Returns the StreamingQuery; callers
@@ -117,7 +115,7 @@ def streaming_lsh_index(
         stream.writeStream.foreachBatch(
             make_index_merge_fn(
                 table, dim, n_bits, id_col, vec_col,
-                app_id=checkpoint, expire_keep=expire_keep,
+                app_id=checkpoint,
             )
         )
         .option("checkpointLocation", checkpoint)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 
 from ..operators.textdedup import minhash_bands, rejected_by_earlier
 from ..sources.catalog import VersionedTable
+from .materialized import EXPIRE_KEEP
 
 
 def make_neardup_gate_fn(
@@ -40,7 +41,6 @@ def make_neardup_gate_fn(
     app_id: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    expire_keep: int | None = 10,
 ):
     """The foreachBatch callable. `index` accumulates (doc_id, band,
     band_key) for EVERY seen doc; `accepted` accumulates the surviving
@@ -70,15 +70,13 @@ def make_neardup_gate_fn(
             )
         if batch_id > index.last_txn(app_id):
             index.write(bands, mode="append", txn=(app_id, int(batch_id)))
-            if expire_keep is not None:
-                index.expire(keep_last=expire_keep)
+            index.expire(keep_last=EXPIRE_KEEP)
         if batch_id > accepted.last_txn(app_id):
             rejected = rejected_by_earlier(bands, prior_bands=prior)
             keepers = batch_df.join(
                 rejected.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
             )
             accepted.write(keepers, mode="append", txn=(app_id, int(batch_id)))
-            if expire_keep is not None:
-                accepted.expire(keep_last=expire_keep)
+            accepted.expire(keep_last=EXPIRE_KEEP)
 
     return _gate

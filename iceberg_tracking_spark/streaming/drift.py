@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 
 from ..operators.binning import bin_counts_by_edges, psi_from_counts
 from ..sources.catalog import VersionedTable
+from .materialized import make_aggregate_merge_fn
 
 __all__ = ["make_drift_merge_fn", "psi_from_counts"]
 
@@ -32,7 +33,6 @@ def make_drift_merge_fn(
     app_id: str,
     value_col: str,
     key_col: str,
-    expire_keep: int | None = 10,
 ):
     """The foreachBatch callable: bucket one micro-batch by the frozen
     `edges` and fold its per-bin counts into `table` (schema:
@@ -54,17 +54,10 @@ def make_drift_merge_fn(
     edge_schema = edge_proj.schema
     edge_vals = [r["edge"] for r in edge_proj.collect()]
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= table.last_txn(app_id):
-            return  # redelivered batch: already committed, skip
+    def _delta(batch_df: DataFrame) -> DataFrame:
         frozen = batch_df.sparkSession.createDataFrame(
             [(v,) for v in edge_vals], edge_schema
         )
-        delta = bin_counts_by_edges(
-            batch_df, frozen, value_col, key_col, out="n_cur"
-        )
-        table.merge_aggregate(delta, ["bin"], ["n_cur"], txn=(app_id, batch_id))
-        if expire_keep is not None:
-            table.expire(keep_last=expire_keep)
+        return bin_counts_by_edges(batch_df, frozen, value_col, key_col, out="n_cur")
 
-    return _merge
+    return make_aggregate_merge_fn(table, _delta, ["bin"], ["n_cur"], app_id=app_id)

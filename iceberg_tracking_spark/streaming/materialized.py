@@ -23,8 +23,8 @@ table.
 
 Snapshot retention: every merge commits a full immutable snapshot, so
 an unbounded stream would otherwise accumulate one table copy per
-micro-batch; `expire_keep` prunes to the newest N versions after each
-merge (time travel across recent batches stays available).
+micro-batch; every merge then prunes to the newest `EXPIRE_KEEP`
+versions (time travel across recent batches stays available).
 """
 
 from __future__ import annotations
@@ -34,6 +34,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.catalog import VersionedTable
+
+# Snapshots every streaming-maintained table keeps after each commit.
+EXPIRE_KEEP = 10
 
 
 def last_merged_batch(table: VersionedTable, app_id: str) -> int:
@@ -46,7 +49,6 @@ def make_merge_fn(
     key_cols: list[str],
     value_col: str,
     app_id: str,
-    expire_keep: int | None = 10,
 ):
     """The foreachBatch callable: (sum, count) delta of one micro-batch
     folded into `table`, gated on the manifest's (app_id, batch_id)
@@ -65,7 +67,6 @@ def make_merge_fn(
         key_cols,
         ["sum_value", "n_events"],
         app_id=app_id,
-        expire_keep=expire_keep,
     )
 
 
@@ -75,17 +76,13 @@ def incremental_rollup(
     key_cols: list[str],
     value_col: str,
     checkpoint: str,
-    expire_keep: int | None = 10,
 ):
     """Start a streaming query maintaining `table` as the running
     (sum, count) rollup of `value_col` per `key_cols`. Returns the
     StreamingQuery; callers own `stop()`."""
     return (
         stream.writeStream.foreachBatch(
-            make_merge_fn(
-                table, key_cols, value_col, app_id=checkpoint,
-                expire_keep=expire_keep,
-            )
+            make_merge_fn(table, key_cols, value_col, app_id=checkpoint)
         )
         .option("checkpointLocation", checkpoint)
         .start()
@@ -98,7 +95,6 @@ def make_aggregate_merge_fn(
     key_cols: list[str],
     sum_cols: list[str],
     app_id: str,
-    expire_keep: int | None = 10,
 ):
     """Generic txn-gated additive fold — the shape every maintained
     structure in streaming/ shares (rollups, ALS Gram sums, mSPRT
@@ -120,7 +116,6 @@ def make_aggregate_merge_fn(
         table.merge_aggregate(
             delta_fn(batch_df), key_cols, sum_cols, txn=(app_id, batch_id)
         )
-        if expire_keep is not None:
-            table.expire(keep_last=expire_keep)
+        table.expire(keep_last=EXPIRE_KEEP)
 
     return _merge

@@ -29,13 +29,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.catalog import VersionedTable
+from .materialized import EXPIRE_KEEP
 
 
 def make_media_catalog_fn(
     catalog: VersionedTable,
     app_id: str,
     head_bytes: int = 65536,
-    expire_keep: int | None = 10,
 ):
     """The foreachBatch callable. Each batch of (path, file_size)
     notifications is head-parsed (bounded IO) and appended to
@@ -44,6 +44,7 @@ def make_media_catalog_fn(
     row shape, so the maintained table IS the query's result for the
     files seen so far."""
     from ..operators.mediacatalog import catalog_from_listing
+    from ..operators.multimodal import path_media_id
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= catalog.last_txn(app_id):
@@ -51,17 +52,13 @@ def make_media_catalog_fn(
         cat = catalog_from_listing(
             batch_df.select("path", "file_size"), head_bytes=head_bytes
         )
-        media_id = F.element_at(
-            F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-        ).cast("long")
         rows = cat.select(
-            media_id.alias("media_id"),
+            path_media_id().alias("media_id"),
             F.col("file_size").alias("n_bytes"),
             "format", "codec", "width", "height",
             "has_alpha", "is_animated", "decodable",
         )
         catalog.write(rows, mode="append", txn=(app_id, int(batch_id)))
-        if expire_keep is not None:
-            catalog.expire(keep_last=expire_keep)
+        catalog.expire(keep_last=EXPIRE_KEEP)
 
     return _ingest

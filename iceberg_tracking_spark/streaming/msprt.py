@@ -34,7 +34,6 @@ __all__ = ["make_msprt_merge_fn"]
 def make_msprt_merge_fn(
     table: VersionedTable,
     app_id: str,
-    expire_keep: int | None = 10,
 ):
     """The foreachBatch callable: aggregate one micro-batch of raw
     (ts, user_id, value) events into its per-day moment delta and fold
@@ -52,5 +51,4 @@ def make_msprt_merge_fn(
         ["day_num"],
         MSPRT_MOMENT_COLS,
         app_id=app_id,
-        expire_keep=expire_keep,
     )

@@ -219,6 +219,8 @@ def frame_order(frames) -> list:
 def run_frames(tracker: SequenceTracker, pdf: pd.DataFrame) -> pd.DataFrame:
     """Step `tracker` over one sequence's detections, frame by frame in
     `frame_order`; returns the emitted rows with a `sequence` column.
+    Rows with a NULL `frame` have no place on the timeline and are
+    dropped (as the reference's loader skips malformed lines).
 
     Columns are extracted to numpy once and each frame's rows taken by
     position (`groupby(...).indices`, original row order), so a frame
@@ -228,6 +230,8 @@ def run_frames(tracker: SequenceTracker, pdf: pd.DataFrame) -> pd.DataFrame:
     applies, so duplicate obj_ids keep the order of the frozen reference
     in tests/test_tracker_parity.py.
     """
+    sequence = pdf["sequence"].iloc[0]
+    pdf = pdf[pdf["frame"].notna()]
     out_rows = []
     idx_by_frame = pdf.groupby("frame", sort=False).indices
     obj_all = pdf["obj_id"].to_numpy()
@@ -237,8 +241,8 @@ def run_frames(tracker: SequenceTracker, pdf: pd.DataFrame) -> pd.DataFrame:
         idx = idx_by_frame[frame]
         sel = idx[np.argsort(obj_all[idx], kind="quicksort")]
         out_rows.extend(tracker.step(frame, box_all[sel], obj_all[sel], conf_all[sel]))
-    out = pd.DataFrame(out_rows, columns=["frame", *_OUT_DTYPES])
-    out.insert(0, "sequence", pdf["sequence"].iloc[0])
+    out = pd.DataFrame(out_rows, columns=["frame", *_OUT_DTYPES]).astype(_OUT_DTYPES)
+    out.insert(0, "sequence", sequence)
     return out
 
 
@@ -250,7 +254,7 @@ def track_one_sequence_pdf(pdf: pd.DataFrame, cfg: TrackerConfig) -> pd.DataFram
     if len(out) and cfg.min_track_length > 1:
         counts = out.groupby("track_id")["frame"].transform("count")
         out = out[counts >= cfg.min_track_length]
-    return out.astype(_OUT_DTYPES)
+    return out
 
 
 def track_sequences(

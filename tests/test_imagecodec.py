@@ -391,6 +391,21 @@ def test_png_decode_rejects_unsupported_shapes():
         decode_png(bytes(data))
 
 
+def test_fixture_same_size_corruption_is_rewritten(tmp_path):
+    """Regeneration compares a fixture's bytes, not its size: a file
+    with one byte changed comes back as generated."""
+    from iceberg_tracking_spark.sources.binary import ensure_png_fixture
+
+    ensure_png_fixture(str(tmp_path))
+    fp = tmp_path / "0000.png"
+    good = fp.read_bytes()
+    bad = bytearray(good)
+    bad[40] ^= 0xFF
+    fp.write_bytes(bytes(bad))
+    ensure_png_fixture(str(tmp_path))
+    assert fp.read_bytes() == good
+
+
 def test_png_fixture_is_deterministic_and_multifilter(tmp_path):
     """Fixture files decode, match a fresh re-encode byte-for-byte
     (idempotent regeneration), and each uses all five filter types."""

@@ -158,15 +158,16 @@ def test_mot_csv_malformed_rows_skipped(spark, tmp_path):
 
 
 def test_write_table_partitioned_parquet(spark, tmp_path):
-    from iceberg_tracking_spark.sources.sinks import iceberg_available, write_table
+    from iceberg_tracking_spark.sources.catalog import iceberg_catalog
+    from iceberg_tracking_spark.sources.sinks import write_table
 
     df = spark.createDataFrame(
         [("a", 1, 1.0), ("a", 2, 2.0), ("b", 3, 3.0)], "seq string, k int, v double"
     )
     path = str(tmp_path / "tbl")
-    # No Iceberg jars in this container — the probe must say so and the
-    # writer must fall through to partitioned parquet.
-    assert iceberg_available(spark) is False
+    # No Iceberg catalog on this session — the writer must fall through
+    # to partitioned parquet.
+    assert iceberg_catalog(spark) is None
     write_table(df, path, partition_by=["seq"])
     import os
 
@@ -569,6 +570,24 @@ def test_minhash_hot_band_guard(spark, tmp_path):
     }
     con.close()
     assert pairs == oracle_pairs
+
+
+def test_map_rows_fan_out_and_all_empty_batch(spark):
+    """`map_rows`: one input row may yield several output rows, placed
+    into the schema by position; a batch whose every row yields nothing
+    comes back as 0 rows of the declared schema."""
+    from iceberg_tracking_spark.operators.multimodal import map_rows
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string").coalesce(1)
+    schema = "k long, i int, s string"
+    two = map_rows(
+        df.where("k = 1"), schema, lambda r: [(r.k, i, r.s * i) for i in (1, 2)]
+    )
+    assert two.schema.simpleString() == "struct<k:bigint,i:int,s:string>"
+    assert sorted(map(tuple, two.collect())) == [(1, 1, "a"), (1, 2, "aa")]
+    none = map_rows(df, schema, lambda r: [])
+    assert none.schema == two.schema
+    assert none.collect() == []
 
 
 def test_binary_file_source_roundtrip(spark, tmp_path):

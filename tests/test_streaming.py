@@ -153,6 +153,44 @@ def test_streaming_tracker_equals_batch(spark, frames):
     pd.testing.assert_frame_equal(got, batch, check_dtype=False)
 
 
+def test_streaming_tracker_drops_null_frames(spark):
+    """A micro-batch holding a NULL-frame detection still tracks: that
+    row is dropped, as in the batch tracker, instead of failing the
+    sequence's state update."""
+    pdf = make_sequence("s1", n_frames=10)
+    with_null = pd.concat([pdf, pdf.iloc[:1].assign(frame=None)], ignore_index=True)
+    cfg = TrackerConfig(min_track_length=1)
+    stream_dir = tempfile.mkdtemp(prefix="det_stream_")
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    try:
+        spark.createDataFrame(with_null, DET_SCHEMA).coalesce(1).write.parquet(
+            stream_dir, mode="append"
+        )
+        stream = spark.readStream.schema(DET_SCHEMA).parquet(stream_dir)
+        q = (
+            streaming_track(stream, cfg)
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName("tracks_null_frame")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            got = spark.sql("SELECT * FROM tracks_null_frame").toPandas()
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(stream_dir, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+    batch = track_one_sequence_pdf(pdf, cfg)
+    key = ["frame", "track_id"]
+    got = got.sort_values(key).reset_index(drop=True)[batch.columns]
+    batch = batch.sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, batch, check_dtype=False)
+
+
 def test_watermark_drops_late_events(spark):
     """T5 semantics: an event arriving behind the watermark must not
     contribute to an already-finalized window (the reference's max_age

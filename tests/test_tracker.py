@@ -141,6 +141,24 @@ def test_deterministic():
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_null_frame_rows_are_dropped():
+    """A detection with a NULL frame has no place on the timeline: it is
+    dropped and the rest of the sequence tracks as if it were absent; a
+    sequence whose frames are all NULL yields an empty, typed result."""
+    pdf = make_sequence("a", n_frames=10)
+    bad = pdf.iloc[:2].assign(frame=None)
+    got = track_one_sequence_pdf(
+        pd.concat([pdf, bad], ignore_index=True), TrackerConfig()
+    )
+    want = track_one_sequence_pdf(pdf, TrackerConfig())
+    pd.testing.assert_frame_equal(
+        got.reset_index(drop=True), want.reset_index(drop=True)
+    )
+    empty = track_one_sequence_pdf(bad, TrackerConfig())
+    assert len(empty) == 0
+    pd.testing.assert_series_equal(empty.dtypes, want.dtypes)
+
+
 def test_distributed_matches_local(spark):
     """groupBy(sequence).applyInPandas == running each sequence locally."""
     pdf = pd.concat(
