@@ -2,7 +2,7 @@
 
 Generalizes the reference's appearance-similarity machinery
 (reference feature_extraction.py:255-297: cosine over 256-d embedding
-vectors) into the two standard large-scale shapes:
+vectors) into the four standard search families:
 
 * ``brute_force_topk`` — exact cosine top-k; the small-query-set path
   (broadcast the queries, scan the corpus once). O(|Q|·|C|) but fully
@@ -15,6 +15,25 @@ vectors) into the two standard large-scale shapes:
   signature equi-join, so cost is Σ|bucket|² ≪ |C|² and the plan is a
   plain shuffled hash join Catalyst/AQE can optimize (skewed buckets
   split by AQE). This is the 100 TB scale path.
+* ``ivf_topk`` — an IVF coarse quantizer: candidates are the members
+  of the query's `nprobe` nearest centroids.
+* ``pq_adc_topk`` / ``ivfpq_topk`` — product-quantized codes ranked by
+  asymmetric (LUT'd) distance, optionally IVF-bounded, with
+  ``exact_rerank`` as the exact-cosine refine stage over their
+  candidates.
+
+Every function reads fixed columns: the corpus is ``(vec_id, e)`` and
+the queries ``(qid, qe)``, both ``e``/``qe`` array<double>. Output is
+``(qid, nid, sim)`` (``adist`` for the PQ rankings). Each family is
+candidate generation followed by ONE scoring tail: ``_cosine_topk``
+rounds the cosine to 6 dp and ``_rank_topk`` keeps the top k per qid,
+ties to the lower nid. Rounding before ranking means float
+summation-order differences can't flip ranks across engines.
+
+Zero-norm rule: the cosine of a pair in which either vector is all
+zeros is NULL (``try_divide``), not a DIVIDE_BY_ZERO error, and a NULL
+similarity ranks last — as DuckDB, which returns NULL for x / 0.0,
+does in the oracles.
 
 Hyperplanes are DETERMINISTIC (a fixed integer mix of (bit, dim)), so
 the same planes are reproducible in any engine — the DuckDB oracle
@@ -25,8 +44,11 @@ bucket boundary is bit-identical.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .clustering import sq_dist
+from .windows import argmax_agg, top_k_per_group
 
 DEFAULT_BITS = 8
 
@@ -100,16 +122,14 @@ def duck_cosine_sql(a: str, b: str, dim: int) -> str:
     )
 
 
-def duck_sig_sql(
-    dim: int, n_bits: int = DEFAULT_BITS, vec: str = "e", plane_prefix: str = "p.h"
-) -> str:
-    """The b-bit sign-LSH signature as a DuckDB expression (planes from
-    a CTE aliased `p`, columns `h0..h{n_bits-1}` via
-    `hyperplane_sql_literals`)."""
+def duck_sig_sql(dim: int) -> str:
+    """The DEFAULT_BITS-bit sign-LSH signature of column `e` as a DuckDB
+    expression (planes from a CTE aliased `p`, columns
+    `h0..h{DEFAULT_BITS-1}` via `hyperplane_sql_literals`)."""
     return " + ".join(
-        f"(CASE WHEN {duck_seq_dot_sql(vec, f'{plane_prefix}{b}', dim)} > 0 "
+        f"(CASE WHEN {duck_seq_dot_sql('e', f'p.h{b}', dim)} > 0 "
         f"THEN {1 << b} ELSE 0 END)"
-        for b in range(n_bits)
+        for b in range(DEFAULT_BITS)
     )
 
 
@@ -126,7 +146,8 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return seq_dot(a, b) / (norm(a) * norm(b))
+    """NULL when either norm is 0 (the module's zero-norm rule)."""
+    return F.try_divide(seq_dot(a, b), norm(a) * norm(b))
 
 
 def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
@@ -136,9 +157,9 @@ def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
     pair — ~2/3 of the per-pair work. Projecting `norm(e)` below the
     join evaluates it once per row; the value (hence the quotient) is
     bit-identical, so oracles are unaffected. Measured ~1.5-2× on the
-    bucket-rerank and brute-force hot paths.
+    bucket-rerank and brute-force hot paths. NULL when `na` or `nb` is 0.
     """
-    return seq_dot(a, b) / (na * nb)
+    return F.try_divide(seq_dot(a, b), na * nb)
 
 
 def signature_lsh(
@@ -160,42 +181,37 @@ def signature_lsh(
     return df.withColumn("sig", sig.cast("long"))
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    corpus_id: str = "vec_id",
-    query_id: str = "qid",
-    vec_col: str = "e",
-    query_vec_col: str = "qe",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Exact cosine top-k: broadcast queries × corpus scan + rank window.
+# ------------------------------------------------------ the scoring tail
 
-    Similarity is rounded before ranking (tie-break: neighbor id) so
-    float summation-order differences can't flip ranks across engines.
-    """
-    corpus_n = corpus.withColumn("_nrm", norm(F.col(vec_col)))
-    queries_n = queries.withColumn("_qnrm", norm(F.col(query_vec_col)))
-    sims = (
-        F.broadcast(queries_n)
-        .join(corpus_n, F.col(corpus_id) != F.col(query_id))
-        .select(
-            query_id,
-            F.col(corpus_id).alias("nid"),
-            F.round(
-                cosine_prenormed(
-                    F.col(query_vec_col), F.col(vec_col),
-                    F.col("_qnrm"), F.col("_nrm"),
-                ),
-                round_digits,
-            ).alias("sim"),
-        )
+
+def _rank_topk(sims: DataFrame, k: int, order: Column) -> DataFrame:
+    """Top k rows per qid by `order`, ties to the lower nid."""
+    return top_k_per_group(sims, ["qid"], [order, F.col("nid").asc()], k)
+
+
+def _cosine_topk(
+    pairs: DataFrame, k: int, nid: str, qe: str, ne: str, q_nrm: str, n_nrm: str
+) -> DataFrame:
+    """(qid, nid, sim): the top k of `pairs` by cosine rounded to 6 dp
+    (sim DESC NULLS LAST — a zero-norm pair ranks last). `pairs` holds
+    one row per candidate (qid, neighbour) pair; the other arguments
+    name its neighbour-id, vector and norm columns."""
+    sims = pairs.select(
+        "qid",
+        F.col(nid).alias("nid"),
+        F.round(
+            cosine_prenormed(F.col(qe), F.col(ne), F.col(q_nrm), F.col(n_nrm)), 6
+        ).alias("sim"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("sim").desc(), F.col("nid").asc())
-    return sims.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop(
-        "rn"
-    )
+    return _rank_topk(sims, k, F.col("sim").desc_nulls_last())
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k: broadcast queries × corpus scan + rank window."""
+    corpus_n = corpus.withColumn("_nrm", norm(F.col("e")))
+    queries_n = queries.withColumn("_qnrm", norm(F.col("qe")))
+    pairs = F.broadcast(queries_n).join(corpus_n, F.col("vec_id") != F.col("qid"))
+    return _cosine_topk(pairs, k, "vec_id", "qe", "e", "_qnrm", "_nrm")
 
 
 def lsh_bucket_topk(
@@ -204,9 +220,6 @@ def lsh_bucket_topk(
     k: int,
     query_pred: Column,
     n_bits: int = DEFAULT_BITS,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    round_digits: int = 6,
     probes: int = 0,
 ) -> DataFrame:
     """ANN top-k: candidates restricted to the query's LSH bucket(s).
@@ -219,12 +232,12 @@ def lsh_bucket_topk(
     while the corpus side is still touched only via the equi-join (the
     standard recall lever; index stays single-signature).
     """
-    signed = signature_lsh(vectors, vec_col, dim, n_bits).withColumn(
-        "_nrm", norm(F.col(vec_col))
+    signed = signature_lsh(vectors, "e", dim, n_bits).withColumn(
+        "_nrm", norm(F.col("e"))
     )
     q = signed.filter(query_pred).select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qe"),
+        F.col("vec_id").alias("qid"),
+        F.col("e").alias("qe"),
         F.col("_nrm").alias("_qnrm"),
         "sig",
     )
@@ -239,25 +252,69 @@ def lsh_bucket_topk(
         q = q.select(
             "qid", "qe", "_qnrm", F.explode(probe_sigs).alias("sig")
         )
-    sims = (
+    pairs = (
         F.broadcast(q)
         .join(signed, "sig")
-        .filter(F.col(id_col) != F.col("qid"))
-        .select(
-            "qid",
-            F.col(id_col).alias("nid"),
-            F.round(
-                cosine_prenormed(
-                    F.col("qe"), F.col(vec_col), F.col("_qnrm"), F.col("_nrm")
-                ),
-                round_digits,
-            ).alias("sim"),
+        .filter(F.col("vec_id") != F.col("qid"))
+    )
+    return _cosine_topk(pairs, k, "vec_id", "qe", "e", "_qnrm", "_nrm")
+
+
+def _ivf(
+    vectors: DataFrame,
+    query_pred: Column,
+    centroid_pred: Column,
+    nprobe: int,
+    payload: dict[str, str],
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF coarse quantizer: `(assigned, probes)`.
+
+    * Centroids are data-sampled rows selected by `centroid_pred`
+      (deterministic — no RNG, so any engine re-derives the identical
+      index; one k-means assignment step away from a trained quantizer).
+    * `assigned` (vec_id, cid, payload…): every vector scored against
+      the broadcast centroid table (O(N·K), the actual IVF build cost),
+      argmax kept — a hash aggregate, not a sort window. Exact cosine
+      with the left-to-right fold, so assignments are bit-identical
+      cross-engine; centroid ties go to the lower cid.
+    * `probes` (qid, payload aliases…, cid): each query's `nprobe`
+      best clusters. Probe ranking touches ONLY the query vectors
+      (O(|Q|·K)) — same fold-order cosine, so ranks are identical to
+      scoring them inside the assignment.
+
+    `payload` maps the vector columns both sides carry (`e`, `_nrm`)
+    to their name on the probe side.
+    """
+    vectors_n = vectors.withColumn("_nrm", norm(F.col("e")))
+    cents = vectors_n.filter(centroid_pred).select(
+        F.col("vec_id").alias("cid"),
+        F.col("e").alias("ce"),
+        F.col("_nrm").alias("_cnrm"),
+    )
+
+    def scored(df: DataFrame) -> DataFrame:
+        return df.crossJoin(F.broadcast(cents)).withColumn(
+            "csim",
+            cosine_prenormed(F.col("e"), F.col("ce"), F.col("_nrm"), F.col("_cnrm")),
         )
+
+    assigned = argmax_agg(
+        scored(vectors_n),
+        ["vec_id"],
+        F.struct(F.col("csim"), (-F.col("cid")).alias("_neg_cid")),
+        {"cid": F.col("cid"), **{c: F.col(c) for c in payload}},
     )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid").asc())
-    return sims.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop(
-        "rn"
+    probes = top_k_per_group(
+        scored(vectors_n.filter(query_pred)),
+        ["vec_id"],
+        [F.col("csim").desc(), F.col("cid").asc()],
+        nprobe,
+    ).select(
+        F.col("vec_id").alias("qid"),
+        *[F.col(c).alias(a) for c, a in payload.items()],
+        "cid",
     )
+    return assigned, probes
 
 
 def ivf_topk(
@@ -266,113 +323,37 @@ def ivf_topk(
     query_pred: Column,
     centroid_pred: Column,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    round_digits: int = 6,
 ) -> DataFrame:
-    """ANN top-k via an IVF (inverted-file) coarse quantizer — the
-    cluster-partitioned alternative to sign-LSH bucketing.
-
-    * Centroids are data-sampled rows selected by `centroid_pred`
-      (deterministic — no RNG, so any engine re-derives the identical
-      index; one k-means assignment step away from a trained quantizer).
-    * Assignment scores every vector against the broadcast centroid
-      table (O(N·K), the actual IVF build cost) and keeps the argmax —
-      a hash aggregate, not a sort window. Exact cosine with the
-      left-to-right fold, so assignments are bit-identical cross-engine.
-    * Search: each query probes its `nprobe` best clusters; candidates
-      are the cluster members (equi-join on centroid id), re-ranked by
-      exact cosine. Recall < 1 by design (the IVF trade).
+    """ANN top-k via an IVF (inverted-file) coarse quantizer (`_ivf`) —
+    the cluster-partitioned alternative to sign-LSH bucketing.
+    Candidates are the members of each query's `nprobe` best clusters
+    (equi-join on centroid id), re-ranked by exact cosine. Recall < 1
+    by design (the IVF trade).
 
     The O(N·K) assignment — the index build — runs exactly ONCE: its
-    only consumer is the candidate equi-join. The probe side re-scores
-    only the query vectors against the broadcast centroids (O(|Q|·K),
-    negligible), so no branch re-touches the full corpus. At 100 TB the
-    assignment would additionally be written out and reused across
-    query batches (sources/catalog.VersionedTable is the write path);
-    within one query the single-consumer plan needs no materialization.
+    only consumer is the candidate equi-join, and the probe side
+    re-scores only the query vectors, so no branch re-touches the full
+    corpus. At 100 TB the assignment would additionally be written out
+    and reused across query batches (sources/catalog.VersionedTable is
+    the write path); within one query the single-consumer plan needs no
+    materialization.
     """
-    from .windows import argmax_agg
-
-    vectors_n = vectors.withColumn("_nrm", norm(F.col(vec_col)))
-    cents = vectors_n.filter(centroid_pred).select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("ce"),
-        F.col("_nrm").alias("_cnrm"),
+    assigned, probes = _ivf(
+        vectors, query_pred, centroid_pred, nprobe, {"e": "qe", "_nrm": "_qnrm"}
     )
-    scored = vectors_n.crossJoin(F.broadcast(cents)).withColumn(
-        "csim",
-        cosine_prenormed(
-            F.col(vec_col), F.col("ce"), F.col("_nrm"), F.col("_cnrm")
-        ),
-    )
-    assigned = argmax_agg(
-        scored,
-        [id_col],
-        F.struct(F.col("csim"), (-F.col("cid")).alias("_neg_cid")),
-        {"cid": F.col("cid"), vec_col: F.col(vec_col), "_nrm": F.col("_nrm")},
-    )
-    # Probe ranking touches ONLY the query vectors — same fold-order
-    # cosine, so ranks are identical to scoring them inside `scored`.
-    q_scored = (
-        vectors_n.filter(query_pred)
-        .crossJoin(F.broadcast(cents))
-        .withColumn(
-            "csim",
-            cosine_prenormed(
-                F.col(vec_col), F.col("ce"), F.col("_nrm"), F.col("_cnrm")
-            ),
-        )
-    )
-    w_probe = Window.partitionBy(id_col).orderBy(
-        F.col("csim").desc(), F.col("cid").asc()
-    )
-    probes = (
-        q_scored.withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("qe"),
-            F.col("_nrm").alias("_qnrm"),
-            "cid",
-        )
-    )
-    sims = (
+    pairs = (
         F.broadcast(probes)
         .join(assigned, "cid")
-        .filter(F.col(id_col) != F.col("qid"))
-        .select(
-            "qid",
-            F.col(id_col).alias("nid"),
-            F.round(
-                cosine_prenormed(
-                    F.col("qe"), F.col(vec_col), F.col("_qnrm"), F.col("_nrm")
-                ),
-                round_digits,
-            ).alias("sim"),
-        )
+        .filter(F.col("vec_id") != F.col("qid"))
     )
-    w_rank = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("nid").asc()
-    )
-    return (
-        sims.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _cosine_topk(pairs, k, "vec_id", "qe", "e", "_qnrm", "_nrm")
 
 
 # --------------------------------------------------- product quantization
 
 
 def pq_codebook(
-    vectors: DataFrame,
-    dim: int,
-    n_sub: int,
-    ksub: int,
-    seed_pred: Column,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
+    vectors: DataFrame, dim: int, n_sub: int, ksub: int, seed_pred: Column
 ) -> DataFrame:
     """Deterministic PQ sub-codebooks: (sp, cid, ce) — one ksub-row
     codebook per subspace, sliced from seed vectors (lowest `ksub` ids
@@ -386,103 +367,78 @@ def pq_codebook(
     """
     subdim = dim // n_sub
     spark = vectors.sparkSession
-    seeds = (
-        vectors.filter(seed_pred).orderBy(id_col).limit(ksub).collect()
-    )
+    seeds = vectors.filter(seed_pred).orderBy("vec_id").limit(ksub).collect()
     rows = []
     for cid, r in enumerate(seeds):
-        e = [float(x) for x in r[vec_col]]
+        e = [float(x) for x in r["e"]]
         for sp in range(n_sub):
             rows.append((sp, cid, e[sp * subdim : (sp + 1) * subdim]))
     return spark.createDataFrame(rows, "sp INT, cid INT, ce ARRAY<DOUBLE>")
 
 
 def _subspace_explode(
-    df: DataFrame, dim: int, n_sub: int, id_col: str, vec_col: str, out_id: str
+    df: DataFrame, dim: int, n_sub: int, out_id: str
 ) -> DataFrame:
+    """(out_id, sp, sub): one row per vector and subspace."""
     subdim = dim // n_sub
     slices = F.array(
         *[
             F.struct(
                 F.lit(sp).alias("sp"),
-                F.slice(F.col(vec_col), sp * subdim + 1, subdim).alias("sub"),
+                F.slice(F.col("e"), sp * subdim + 1, subdim).alias("sub"),
             )
             for sp in range(n_sub)
         ]
     )
     return df.select(
-        F.col(id_col).alias(out_id), F.explode(slices).alias("_s")
+        F.col("vec_id").alias(out_id), F.explode(slices).alias("_s")
     ).select(out_id, F.col("_s.sp").alias("sp"), F.col("_s.sub").alias("sub"))
 
 
 def pq_encode(
-    vectors: DataFrame,
-    codebook: DataFrame,
-    dim: int,
-    n_sub: int,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
+    vectors: DataFrame, codebook: DataFrame, dim: int, n_sub: int
 ) -> DataFrame:
-    """PQ encoding: (id, sp, code, sub_dist) — nearest sub-centroid per
-    subspace (squared-L2 left fold, ties to the lowest code).
+    """PQ encoding: (vec_id, sp, code, sub_dist) — nearest sub-centroid
+    per subspace (squared-L2 left fold, ties to the lowest code).
 
     The compression step of IVF-PQ: dim doubles → n_sub small ints
     (~32x for 64-dim float64 → 8 codes). One broadcast join against the
     (n_sub*ksub)-row codebook + a hash argmin; shuffle carries only
     (id, sp) groups — linear, no pairwise work.
     """
-    from .clustering import sq_dist
-    from .windows import argmax_agg
-
-    subs = _subspace_explode(vectors, dim, n_sub, id_col, vec_col, id_col)
+    subs = _subspace_explode(vectors, dim, n_sub, "vec_id")
     scored = subs.join(F.broadcast(codebook), "sp").withColumn(
         "_d", sq_dist(F.col("sub"), F.col("ce"))
     )
     return argmax_agg(
         scored,
-        [id_col, "sp"],
+        ["vec_id", "sp"],
         F.struct((-F.col("_d")).alias("_nd"), (-F.col("cid")).alias("_nc")),
         {"code": F.col("cid"), "sub_dist": F.col("_d")},
     )
 
 
-def pq_adc_topk(
-    vectors: DataFrame,
-    codebook: DataFrame,
-    dim: int,
-    n_sub: int,
-    k: int,
-    query_pred: Column,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    round_digits: int = 6,
+def _adc_lut(
+    vectors: DataFrame, codebook: DataFrame, dim: int, n_sub: int, query_pred: Column
 ) -> DataFrame:
-    """Asymmetric-distance (ADC) PQ search: per query, top-k database
-    vectors by the sum of per-subspace query-to-centroid distances
-    looked up through the database codes — queries never touch raw
-    database vectors, which is the point at 100 TB (codes are the only
-    corpus-sized relation).
-
-    Shape: LUT = queries x codebook (tiny, broadcast), joined to the
-    code table on (sp, code); per (qid, id) the n_sub partial distances
-    are folded IN SUBSPACE ORDER (array_sort + left fold) so the total
-    is bit-identical to the oracle's `list_reduce(list(d ORDER BY sp))`
-    — a float sum over a hash-shuffled group would be order-dependent.
-    """
-    codes = pq_encode(vectors, codebook, dim, n_sub, id_col, vec_col)
-    from .clustering import sq_dist
-
-    qsubs = _subspace_explode(
-        vectors.filter(query_pred), dim, n_sub, id_col, vec_col, "qid"
-    )
-    lut = qsubs.join(F.broadcast(codebook), "sp").select(
+    """The ADC lookup table (qid, sp, code, _d): every query
+    subvector's squared distance to every sub-centroid. |Q|·n_sub·ksub
+    rows — tiny, broadcast by the callers."""
+    qsubs = _subspace_explode(vectors.filter(query_pred), dim, n_sub, "qid")
+    return qsubs.join(F.broadcast(codebook), "sp").select(
         "qid", "sp", F.col("cid").alias("code"),
         sq_dist(F.col("sub"), F.col("ce")).alias("_d"),
     )
-    joined = codes.join(F.broadcast(lut), ["sp", "code"]).filter(
-        F.col("qid") != F.col(id_col)
-    )
-    folded = joined.groupBy("qid", id_col).agg(
+
+
+def _adc_topk(joined: DataFrame, k: int) -> DataFrame:
+    """(qid, nid, adist): per (qid, vec_id) the LUT'd partial distances
+    of `joined` folded IN SUBSPACE ORDER (array_sort + left fold), so
+    the total is bit-identical to the oracle's
+    `list_reduce(list(d ORDER BY sp))` — a float sum over a
+    hash-shuffled group would be order-dependent — then the k smallest
+    per query, rounded to 6 dp."""
+    folded = joined.groupBy("qid", "vec_id").agg(
         F.aggregate(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("sp", "_d"))),
@@ -492,18 +448,35 @@ def pq_adc_topk(
             lambda acc, x: acc + x,
         ).alias("_adist")
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.round("_adist", round_digits).asc(), F.col(id_col).asc()
+    dists = folded.select(
+        "qid", F.col("vec_id").alias("nid"), F.round("_adist", 6).alias("adist")
     )
-    return (
-        folded.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            "qid",
-            F.col(id_col).alias("nid"),
-            F.round("_adist", round_digits).alias("adist"),
-        )
+    return _rank_topk(dists, k, F.col("adist").asc())
+
+
+def pq_adc_topk(
+    vectors: DataFrame,
+    codebook: DataFrame,
+    dim: int,
+    n_sub: int,
+    k: int,
+    query_pred: Column,
+) -> DataFrame:
+    """Asymmetric-distance (ADC) PQ search: per query, top-k database
+    vectors by the sum of per-subspace query-to-centroid distances
+    looked up through the database codes — queries never touch raw
+    database vectors, which is the point at 100 TB (codes are the only
+    corpus-sized relation).
+
+    Shape: LUT = queries x codebook (tiny, broadcast), joined to the
+    code table on (sp, code), folded per (qid, vec_id) by `_adc_topk`.
+    """
+    codes = pq_encode(vectors, codebook, dim, n_sub)
+    lut = _adc_lut(vectors, codebook, dim, n_sub, query_pred)
+    joined = codes.join(F.broadcast(lut), ["sp", "code"]).filter(
+        F.col("qid") != F.col("vec_id")
     )
+    return _adc_topk(joined, k)
 
 
 def ivfpq_topk(
@@ -515,9 +488,6 @@ def ivfpq_topk(
     query_pred: Column,
     centroid_pred: Column,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    round_digits: int = 6,
 ) -> DataFrame:
     """IVF-PQ search (the FAISS IVFADC layout, minus residual encoding):
     an IVF coarse quantizer bounds WHICH vectors each query compares
@@ -533,96 +503,23 @@ def ivfpq_topk(
     codebook contract with `pq_encode`'s oracle; the recall trade is
     the standard IVFFlat-with-PQ-ranking layout.
     """
-    from .clustering import sq_dist
-    from .windows import argmax_agg
-
-    vectors_n = vectors.withColumn("_nrm", norm(F.col(vec_col)))
-    cents = vectors_n.filter(centroid_pred).select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("ce"),
-        F.col("_nrm").alias("_cnrm"),
-    )
-    coarse = vectors_n.crossJoin(F.broadcast(cents)).withColumn(
-        "csim",
-        cosine_prenormed(
-            F.col(vec_col), F.col("ce"), F.col("_nrm"), F.col("_cnrm")
-        ),
-    )
-    assigned = argmax_agg(
-        coarse,
-        [id_col],
-        F.struct(F.col("csim"), (-F.col("cid")).alias("_neg_cid")),
-        {"cid": F.col("cid")},
-    )
-    w_probe = Window.partitionBy(id_col).orderBy(
-        F.col("csim").desc(), F.col("cid").asc()
-    )
-    probes = (
-        vectors_n.filter(query_pred)
-        .crossJoin(F.broadcast(cents))
-        .withColumn(
-            "csim",
-            cosine_prenormed(
-                F.col(vec_col), F.col("ce"), F.col("_nrm"), F.col("_cnrm")
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select(F.col(id_col).alias("qid"), "cid")
-    )
+    assigned, probes = _ivf(vectors, query_pred, centroid_pred, nprobe, {})
     candidates = (
         F.broadcast(probes)
         .join(assigned, "cid")
-        .filter(F.col("qid") != F.col(id_col))
-        .select("qid", id_col)
+        .filter(F.col("qid") != F.col("vec_id"))
+        .select("qid", "vec_id")
     )
-    codes = pq_encode(vectors, codebook, dim, n_sub, id_col, vec_col)
-    qsubs = _subspace_explode(
-        vectors.filter(query_pred), dim, n_sub, id_col, vec_col, "qid"
+    codes = pq_encode(vectors, codebook, dim, n_sub)
+    lut = _adc_lut(vectors, codebook, dim, n_sub, query_pred)
+    joined = candidates.join(codes, "vec_id").join(
+        F.broadcast(lut), ["qid", "sp", "code"]
     )
-    lut = qsubs.join(F.broadcast(codebook), "sp").select(
-        "qid", "sp", F.col("cid").alias("code"),
-        sq_dist(F.col("sub"), F.col("ce")).alias("_d"),
-    )
-    folded = (
-        candidates.join(codes, id_col)
-        .join(F.broadcast(lut), ["qid", "sp", "code"])
-        .groupBy("qid", id_col)
-        .agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sp", "_d"))),
-                    lambda s: s["_d"],
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("_adist")
-        )
-    )
-    w_rank = Window.partitionBy("qid").orderBy(
-        F.round("_adist", round_digits).asc(), F.col(id_col).asc()
-    )
-    return (
-        folded.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= k)
-        .select(
-            "qid",
-            F.col(id_col).alias("nid"),
-            F.round("_adist", round_digits).alias("adist"),
-        )
-    )
+    return _adc_topk(joined, k)
 
 
 def exact_rerank(
-    candidates: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    corpus_id: str = "vec_id",
-    vec_col: str = "e",
-    query_id: str = "qid",
-    query_vec_col: str = "qe",
-    round_digits: int = 6,
+    candidates: DataFrame, corpus: DataFrame, queries: DataFrame, k: int
 ) -> DataFrame:
     """Exact-distance refinement of an approximate candidate list —
     the FAISS "refine" stage that makes PQ-coded search usable: the
@@ -640,46 +537,21 @@ def exact_rerank(
     constant, never a corpus scan; the raw vectors of only the
     candidate rows are fetched (an equi-join on the candidate ids).
 
-    `candidates` carries (query_id, nid); `corpus` the raw vectors;
-    `queries` the (query_id, query_vec) pairs. Output: (qid, nid, sim),
-    top-k per query by rounded cosine, nid tie-break — the
-    brute_force_topk contract over the candidate subset.
+    `candidates` carries (qid, nid). Output: the brute_force_topk
+    contract over the candidate subset.
     """
     ne = corpus.select(
-        F.col(corpus_id).alias("nid"),
-        F.col(vec_col).alias("_ne"),
-        norm(F.col(vec_col)).alias("_nnrm"),
+        F.col("vec_id").alias("nid"), "e", norm(F.col("e")).alias("_nrm")
     )
-    qe = queries.select(
-        query_id,
-        F.col(query_vec_col).alias("_qe"),
-        norm(F.col(query_vec_col)).alias("_qnrm"),
-    )
-    scored = (
-        candidates.select(query_id, "nid")
+    qe = queries.select("qid", "qe", norm(F.col("qe")).alias("_qnrm"))
+    pairs = (
+        candidates.select("qid", "nid")
         # self-pair exclusion: part of the brute_force_topk contract —
         # when queries are drawn from the corpus and the upstream
         # index did not filter self, the query would otherwise take
         # rank 1 at sim=1.0 and silently waste one of the k slots
-        .filter(F.col("nid") != F.col(query_id))
+        .filter(F.col("nid") != F.col("qid"))
         .join(ne, "nid")
-        .join(F.broadcast(qe), query_id)
-        .select(
-            query_id,
-            "nid",
-            F.round(
-                cosine_prenormed(
-                    F.col("_qe"), F.col("_ne"), F.col("_qnrm"), F.col("_nnrm")
-                ),
-                round_digits,
-            ).alias("sim"),
-        )
+        .join(F.broadcast(qe), "qid")
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col("nid").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _cosine_topk(pairs, k, "nid", "qe", "e", "_qnrm", "_nrm")

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from ..functions.text import LANG_MARKERS, STOPWORDS, shingles_from_tokens, tokens
 from ..operators.similarity import (
     DEFAULT_BITS,
-    cosine,
     duck_cosine_sql,
     duck_sig_sql,
     hyperplane_sql_literals,
@@ -1498,7 +1497,7 @@ def q_rrf_fusion(spark, sf_dir):
         F.col("vec_id").alias("qid"), F.col("e").alias("qe")
     )
     sem = (
-        brute_force_topk(v, qv, k=_RRF_TOPK, corpus_id="vec_id")
+        brute_force_topk(v, qv, k=_RRF_TOPK)
         .withColumn(
             "sem_rank",
             F.row_number().over(

@@ -1096,13 +1096,11 @@ def q_image_similarity(spark, sf_dir):
 
     emb = map_rows(
         media_from_image_files(spark).select("media_id", "content"),
-        "media_id long, emb array<double>",
+        "vec_id long, e array<double>",
         _embed,
     )
-    q = emb.select(F.col("media_id").alias("qid"), F.col("emb").alias("qe"))
-    return brute_force_topk(
-        emb, q, k=3, corpus_id="media_id", vec_col="emb", query_vec_col="qe"
-    ).select("qid", F.col("nid"), "sim")
+    q = emb.select(F.col("vec_id").alias("qid"), F.col("e").alias("qe"))
+    return brute_force_topk(emb, q, k=3)
 
 
 def _image_resize_oracle() -> str:

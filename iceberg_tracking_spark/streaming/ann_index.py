@@ -24,7 +24,7 @@ inside the same atomic manifest swap), mirroring make_merge_fn.
 
 At 100 TB: the upsert's anti-join is keyed by vec_id — one shuffle of
 index ∪ delta, where the delta side is micro-batch-sized and broadcast;
-the table is hive-partitioned by `sig_pfx` (the low `pfx_bits` of the
+the table is hive-partitioned by `sig_pfx` (the low `PFX_BITS` of the
 signature, declared at table creation and inherited by every later
 merge), so a query-time bucket probe that filters on sig_pfx reads
 only its own partition directories — partition pruning at the
@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.similarity import DEFAULT_BITS, norm, signature_lsh
+from ..operators.similarity import _cosine_topk, norm, signature_lsh
 from ..sources.catalog import VersionedTable
 from .materialized import EXPIRE_KEEP
 
@@ -44,39 +44,25 @@ from .materialized import EXPIRE_KEEP
 PFX_BITS = 4  # sig_pfx = sig mod 2^PFX_BITS → 16 partition directories
 
 
-def index_rows(
-    vectors: DataFrame,
-    dim: int,
-    n_bits: int = DEFAULT_BITS,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    pfx_bits: int = PFX_BITS,
-) -> DataFrame:
+def index_rows(vectors: DataFrame, dim: int) -> DataFrame:
     """The index relation for a (batch or micro-batch of) vectors:
-    (id, vec, sig, sig_pfx, nrm). Pure per-row Catalyst expressions —
+    (vec_id, e, sig, sig_pfx, nrm). Pure per-row Catalyst expressions —
     the signature and norm are the only things the query-time bucket
     join needs, precomputed at write time (the standard index trade:
     pay once on ingest, never per query). `sig_pfx` is the partition
-    key: coarse enough (2^pfx_bits dirs) to avoid small files, fine
-    enough that a single-bucket probe reads 1/2^pfx_bits of the
+    key: coarse enough (2^PFX_BITS dirs) to avoid small files, fine
+    enough that a single-bucket probe reads 1/2^PFX_BITS of the
     table's files."""
-    return signature_lsh(vectors, vec_col, dim, n_bits).select(
-        F.col(id_col),
-        F.col(vec_col),
+    return signature_lsh(vectors, "e", dim).select(
+        "vec_id",
+        "e",
         "sig",
-        F.pmod(F.col("sig"), F.lit(1 << pfx_bits)).alias("sig_pfx"),
-        norm(F.col(vec_col)).alias("nrm"),
+        F.pmod(F.col("sig"), F.lit(1 << PFX_BITS)).alias("sig_pfx"),
+        norm(F.col("e")).alias("nrm"),
     )
 
 
-def make_index_merge_fn(
-    table: VersionedTable,
-    dim: int,
-    n_bits: int = DEFAULT_BITS,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    app_id: str = "ann-index",
-):
+def make_index_merge_fn(table: VersionedTable, dim: int, app_id: str):
     """The foreachBatch callable maintaining the LSH index table.
     Exposed separately (same contract as materialized.make_merge_fn)
     so batching splits and redelivery are directly testable without a
@@ -85,10 +71,9 @@ def make_index_merge_fn(
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= table.last_txn(app_id):
             return  # redelivered batch: already committed, skip
-        delta = index_rows(batch_df, dim, n_bits, id_col, vec_col)
         table.upsert(
-            delta,
-            [id_col],
+            index_rows(batch_df, dim),
+            ["vec_id"],
             txn=(app_id, int(batch_id)),
             # declared once at table birth, inherited by later merges
             partition_by_on_create=["sig_pfx"],
@@ -99,24 +84,15 @@ def make_index_merge_fn(
 
 
 def streaming_lsh_index(
-    stream: DataFrame,
-    table: VersionedTable,
-    dim: int,
-    checkpoint: str,
-    n_bits: int = DEFAULT_BITS,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
+    stream: DataFrame, table: VersionedTable, dim: int, checkpoint: str
 ):
     """Start a streaming query maintaining `table` as the live LSH
-    index of the vector stream. Returns the StreamingQuery; callers
-    own `stop()`. app_id = checkpoint location, as in
+    index of the vector stream (vec_id, e). Returns the StreamingQuery;
+    callers own `stop()`. app_id = checkpoint location, as in
     materialized.incremental_rollup."""
     return (
         stream.writeStream.foreachBatch(
-            make_index_merge_fn(
-                table, dim, n_bits, id_col, vec_col,
-                app_id=checkpoint,
-            )
+            make_index_merge_fn(table, dim, app_id=checkpoint)
         )
         .option("checkpointLocation", checkpoint)
         .start()
@@ -124,64 +100,24 @@ def streaming_lsh_index(
 
 
 def bucket_topk_from_index(
-    index: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    query_id: str = "qid",
-    query_vec: str = "qe",
-    query_sig: str = "sig",
-    query_nrm: str = "qnrm",
-    round_digits: int = 6,
+    index: DataFrame, queries: DataFrame, k: int
 ) -> DataFrame:
     """lsh_bucket_topk's search stage over a MAINTAINED index relation
-    (vec_id, e, sig[, sig_pfx], nrm) instead of signing the corpus
-    inline — the read path of the streamed index. Identical semantics:
-    bucket equi-join on sig, exact cosine re-rank, top-k per query.
+    (`index_rows`: vec_id, e, sig, sig_pfx, nrm) instead of signing the
+    corpus inline — the read path of the streamed index. `queries`
+    carries (qid, qe, sig, qnrm): the query vector with its signature
+    and norm. Identical semantics: bucket equi-join on sig, exact
+    cosine re-rank, top-k per query.
 
-    When the index carries the `sig_pfx` partition column, it joins as
-    a SECOND equi-key (derived from sig, so semantics-preserving):
-    joining on the partition column lets Spark's dynamic partition
-    pruning skip every partition directory no query signature maps to
-    — the broadcast query side becomes the pruning subquery."""
-    from ..operators.similarity import cosine_prenormed
-
-    q = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).alias("qe"),
-        F.col(query_sig).alias("sig"),
-        F.col(query_nrm).alias("_qnrm"),
-    )
-    join_keys = ["sig"]
-    if "sig_pfx" in index.columns:
-        q = q.withColumn(
-            "sig_pfx", F.pmod(F.col("sig"), F.lit(1 << PFX_BITS))
-        )
-        join_keys = ["sig_pfx", "sig"]
-    from pyspark.sql import Window
-
-    sims = (
+    The `sig_pfx` partition column joins as a SECOND equi-key (derived
+    from sig, so semantics-preserving): joining on the partition column
+    lets Spark's dynamic partition pruning skip every partition
+    directory no query signature maps to — the broadcast query side
+    becomes the pruning subquery."""
+    q = queries.withColumn("sig_pfx", F.pmod(F.col("sig"), F.lit(1 << PFX_BITS)))
+    pairs = (
         F.broadcast(q)
-        .join(index, join_keys)
-        .filter(F.col(id_col) != F.col("qid"))
-        .select(
-            "qid",
-            F.col(id_col).alias("nid"),
-            F.round(
-                cosine_prenormed(
-                    F.col("qe"), F.col(vec_col),
-                    F.col("_qnrm"), F.col("nrm"),
-                ),
-                round_digits,
-            ).alias("sim"),
-        )
+        .join(index, ["sig_pfx", "sig"])
+        .filter(F.col("vec_id") != F.col("qid"))
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("nid").asc()
-    )
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _cosine_topk(pairs, k, "vec_id", "qe", "e", "qnrm", "nrm")

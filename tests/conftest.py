@@ -34,8 +34,18 @@ def make_session():
     baseline with it, so the baseline and the test count the same plans.
     The status store keeps every job and stage (`RETAIN_CONF`): the work
     counters read the stages of each query's jobs, and a stage evicted
-    under Spark's default 1000-stage cap cannot be read back."""
-    return get_spark(app_name="tests", shuffle_partitions=8, extra_conf=RETAIN_CONF)
+    under Spark's default 1000-stage cap cannot be read back.
+
+    The driver heap is capped at 3 GB (`get_spark` defaults to 8 GB):
+    the JVM grows into whatever heap it is given before it collects. On
+    a 4-vCPU, 15 GB host the full suite peaked at 9.2 GiB JVM RSS with
+    8 GB, in the ANN scale tests, and at 4.2 GiB with 3 GB, in about the
+    same wall time; with 2 GB it ran far slower (garbage collection)."""
+    return get_spark(
+        app_name="tests",
+        shuffle_partitions=8,
+        extra_conf={**RETAIN_CONF, "spark.driver.memory": "3g"},
+    )
 
 
 @pytest.fixture(scope="session")

@@ -517,6 +517,69 @@ def test_multiprobe_lsh_improves_recall(spark, sf_dir):
     assert r4 >= 0.4
 
 
+def test_brute_force_topk_zero_vector_matches_duckdb(spark):
+    """An all-zero embedding has no direction: every pair it is in gets
+    a NULL similarity that ranks last, as DuckDB's x / 0.0 = NULL does
+    in the oracle form — not a DIVIDE_BY_ZERO that kills the job. k=2
+    of 3 neighbours, so a NULL ranked first would show."""
+    import duckdb
+
+    from iceberg_tracking_spark.operators.similarity import (
+        brute_force_topk,
+        duck_cosine_sql,
+    )
+
+    vecs = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])]
+    v = spark.createDataFrame(vecs, "vec_id long, e array<double>")
+    q = v.select(F.col("vec_id").alias("qid"), F.col("e").alias("qe"))
+    got = {tuple(r) for r in brute_force_topk(v, q, k=2).collect()}
+
+    values = ", ".join(f"({i}, {e}::DOUBLE[])" for i, e in vecs)
+    want = set(
+        duckdb.sql(
+            f"""
+            WITH v AS (SELECT * FROM (VALUES {values}) t(vec_id, e)),
+            sims AS (
+                SELECT q.vec_id AS qid, c.vec_id AS nid,
+                       round({duck_cosine_sql("q.e", "c.e", 2)}, 6) AS sim
+                FROM v q, v c WHERE q.vec_id != c.vec_id
+            )
+            SELECT qid, nid, sim FROM (
+                SELECT *, row_number() OVER (
+                    PARTITION BY qid ORDER BY sim DESC NULLS LAST, nid
+                ) AS rn FROM sims
+            ) WHERE rn <= 2
+            """
+        ).fetchall()
+    )
+    assert got == want
+    assert {(0, 1, None), (0, 2, None), (1, 3, 0.707107), (1, 2, 0.0)} <= got
+
+
+def test_exact_rerank_excludes_self_pairs(spark, sf_dir):
+    """Re-ranking ALL pairs, the (q, q) self-pairs included, must give
+    exactly the brute-force top-k: the self-pair (sim 1.0) is filtered,
+    not ranked first."""
+    from iceberg_tracking_spark.operators.similarity import (
+        brute_force_topk,
+        exact_rerank,
+    )
+    from iceberg_tracking_spark.sources.tables import load_table
+
+    v = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    )
+    q = v.filter(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
+    )
+    cands = q.select("qid").crossJoin(v.select(F.col("vec_id").alias("nid")))
+    assert cands.filter(F.col("qid") == F.col("nid")).count() == q.count()
+    got = {tuple(r) for r in exact_rerank(cands, v, q, k=3).collect()}
+    want = {tuple(r) for r in brute_force_topk(v, q, k=3).collect()}
+    assert got == want
+    assert len(got) == 3 * q.count()
+
+
 def test_minhash_hot_band_guard(spark, tmp_path):
     """A degenerate corpus (one giant cluster of identical docs) must
     not produce the quadratic candidate set: the hot band buckets are

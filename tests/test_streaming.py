@@ -777,10 +777,7 @@ def test_streaming_lsh_index_equals_batch_build(spark, sf_dir, tmp_path):
     )
     got_topk = {
         (r["qid"], r["nid"], r["sim"])
-        for r in bucket_topk_from_index(
-            idx, queries, k=3, query_vec="qe", query_sig="sig",
-            query_nrm="qnrm", query_id="qid",
-        ).collect()
+        for r in bucket_topk_from_index(idx, queries, k=3).collect()
     }
     want_topk = {
         (r["qid"], r["nid"], r["sim"])
